@@ -67,18 +67,8 @@ object GraftQuery {
     * (count/sum); null (e.g. sum over zero rows) reads as 0. Values are
     * unchanged by construction: the observed plan computes the identical
     * rows, and R17OptSpec pins probe==separate-job-count equality. */
-  /** AdjBench measurement hook ONLY: `false` routes checkpointCounted
-    * through a separate post-checkpoint aggregate job (the pre-r17
-    * probe shape) so the observe form can be A/B'd interleaved. */
-  private[graft] var ObserveProbes = true
-
   def checkpointCounted(df: DataFrame,
                         probe: org.apache.spark.sql.Column): (DataFrame, Long) = {
-    if (!ObserveProbes) {
-      val ck = df.localCheckpoint()
-      val r = ck.agg(probe.as("p")).head()
-      return (ck, if (r.isNullAt(0)) 0L else r.getLong(0))
-    }
     val obs = org.apache.spark.sql.Observation()
     val ck = df.observe(obs, probe.as("p")).localCheckpoint()
     val v = obs.get("p") match {

@@ -139,18 +139,26 @@ case class PcaQuantGram(child: Expression)
   // PcaParitySpec's bit-parity pins carry over unchanged.
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
+      // Fresh local names: with a non-nullable child the body lands
+      // unbraced in the enclosing method, so two kernels in one
+      // projection would otherwise redeclare the same locals.
+      val d = ctx.freshName("d")
+      val out = ctx.freshName("out")
+      val i = ctx.freshName("i")
+      val j = ctx.freshName("j")
+      val xi = ctx.freshName("xi")
       s"""
-         |int graftD = $c.numElements();
-         |long[] graftOut = new long[graftD * graftD + graftD];
-         |for (int graftI = 0; graftI < graftD; graftI++) {
-         |  double graftXi = (double) $c.getFloat(graftI);
-         |  for (int graftJ = 0; graftJ < graftD; graftJ++) {
-         |    graftOut[graftI * graftD + graftJ] =
-         |      (long) java.lang.Math.floor(graftXi * (double) $c.getFloat(graftJ) * 1e4);
+         |int $d = $c.numElements();
+         |long[] $out = new long[$d * $d + $d];
+         |for (int $i = 0; $i < $d; $i++) {
+         |  double $xi = (double) $c.getFloat($i);
+         |  for (int $j = 0; $j < $d; $j++) {
+         |    $out[$i * $d + $j] =
+         |      (long) java.lang.Math.floor($xi * (double) $c.getFloat($j) * 1e4);
          |  }
-         |  graftOut[graftD * graftD + graftI] = (long) java.lang.Math.floor(graftXi * 1e6);
+         |  $out[$d * $d + $i] = (long) java.lang.Math.floor($xi * 1e6);
          |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(graftOut);
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
        """.stripMargin
     })
 

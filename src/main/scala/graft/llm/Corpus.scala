@@ -691,7 +691,10 @@ object Corpus {
   private[graft] def curatedKeepList(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val path = s"/tmp/graft_keep/$sfx"
-    Layouts.parquetLayout(path, path,
+    // The meta leads with the scoring version: the keep-list is filtered
+    // on quality scores, so a score change must rebuild it even when the
+    // documents are unchanged.
+    Layouts.parquetLayout(path, path, s"$KeepListVersion:" +
         Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text", "source", "lang")) {
       curateBatch(s, dir, Tables.documents(s, dir),
           perplexityScores(s, dir), Dedup.clusterKeepers(s, dir))
@@ -699,6 +702,10 @@ object Corpus {
     }
     s.read.parquet(path)
   }
+
+  /** Version of the signals stored in the keep-list; bump it when a
+    * signal's formula changes. v2: exact integer half-up quality score. */
+  private final val KeepListVersion = "keep-v2"
 
   val curate: GraftQuery = GraftQuery(
     "llm_curate",

@@ -152,107 +152,45 @@ object Dedup {
     * PPJoin family): a pair with J >= tau must share a shingle inside the
     * first floor((1-tau)|A|)+1 elements of each doc's shingle set under a
     * consistent global order — so the candidate join is an equi-join on
-    * prefix-shingle hash. The default global order is plain hash order;
-    * rarest-first (document-frequency) order is available behind the
-    * `rarestFirstPrefixes` flag — see `prefixes` for the trade-off. */
+    * prefix-shingle hash. The global order is plain hash order — see
+    * `prefixesOf`. */
   val ngramJaccard: GraftQuery = GraftQuery(
     "llm_dedup_ngram_jaccard",
-    (s, dir) => ngramJaccardPipeline(s, dir, rarestFirstPrefixes),
+    (s, dir) => jaccardPipelineOver(s, shingled(s, dir), merge = false),
     Some(jaccardOracle)
   )
 
-  /** Flag for the PPJoin prefix order (default off): rarest-first prefixes
-    * win on Zipfian corpora — see the scaladoc on `prefixes`. Settable per
-    * run via `-Dgraft.ppjoin.rarestFirst=true` or
-    * `GRAFT_PPJOIN_RAREST_FIRST=true`. */
-  def rarestFirstPrefixes: Boolean =
-    sys.props.get("graft.ppjoin.rarestFirst")
-      .orElse(sys.env.get("GRAFT_PPJOIN_RAREST_FIRST"))
-      .exists(_.equalsIgnoreCase("true"))
-
   /** PPJoin prefix table: (doc_id, n, pos, hv) — the first
     * floor((1-tau)·n)+1 shingles of each doc under a consistent GLOBAL
-    * total order, which is what makes prefix filtering lossless.
-    *
-    * Two orders, both lossless:
-    *  - default: plain hash order — free, because `shingled` builds the
-    *    sets pre-sorted, so the prefix is a `slice` in the scan projection;
-    *  - rarest-first: ascending document frequency (ties by hash) — one
-    *    groupBy(hv).count + join + per-doc window sort extra. Prefixes then
-    *    hold each doc's most SELECTIVE shingles, so on Zipfian corpora the
-    *    candidate set collapses toward the true-positive count. On this
-    *    synthetic near-uniform corpus it was measured to prune only ~1.5×
-    *    for two extra shuffles — hence default off (SCALE.md records the
-    *    crossover reasoning).
-    * The positional suffix bound stays valid under either order because
-    * `pos` is the element's rank in the SAME global order on both sides. */
-  private[graft] def prefixes(s: SparkSession, dir: String,
-                            rarestFirst: Boolean): DataFrame =
-    prefixesOf(s, shingled(s, dir), rarestFirst)
-
-  private[graft] def prefixesOf(s: SparkSession, sh: DataFrame,
-                                rarestFirst: Boolean): DataFrame = {
+    * total order, which is what makes prefix filtering lossless. The order
+    * is plain hash order — free, because `shingled` builds the sets
+    * pre-sorted, so the prefix is a `slice` in the scan projection.
+    * Rarest-first (document-frequency) order was measured to prune only
+    * ~1.5× on this corpus for two extra shuffles, so it is not built
+    * (SCALE.md §PPJoin). */
+  private[graft] def prefixesOf(s: SparkSession, sh: DataFrame): DataFrame = {
     import s.implicits._
     val plen = (floor(lit(1.0 - Tau) * $"n") + 1).cast("int")
-    if (!rarestFirst) {
-      sh.select($"doc_id", $"n",
-        posexplode(slice($"shingles", lit(1), plen)).as(Seq("pos", "hv")))
-    } else {
-      val ex = sh.select($"doc_id", $"n", explode($"shingles").as("hv"))
-      val dfreq = ex.groupBy($"hv").agg(count(lit(1)).as("df"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"doc_id").orderBy($"df".asc, $"hv".asc)
-      ex.join(dfreq.hint("shuffle_hash"), "hv")
-        .withColumn("pos", row_number().over(w) - 1)
-        .filter($"pos" < plen)
-        .select($"doc_id", $"n", $"pos", $"hv")
-    }
+    sh.select($"doc_id", $"n",
+      posexplode(slice($"shingles", lit(1), plen)).as(Seq("pos", "hv")))
   }
 
-  /** The llm_dedup_ngram_jaccard dataflow, parameterized on prefix order
-    * so DedupSpec can pin both orders to identical results. */
-  private[graft] def ngramJaccardPipeline(s: SparkSession, dir: String,
-                                        rarestFirst: Boolean): DataFrame =
-    jaccardPipelineOver(s, shingled(s, dir), rarestFirst, merge = false)
-
-  /** Same dataflow over an arbitrary (doc_id, shingles, n) signature table
-    * — the layout-reuse entry point: `llm_dedup_bucketed` passes the
+  /** The llm_dedup_ngram_jaccard dataflow over a (doc_id, shingles, n)
+    * signature table — also the layout-reuse entry point: `llm_dedup_bucketed` passes the
     * persisted bucketed table and `merge = true` so the verification joins
     * plan as SMJ with the bucketed side exchange-free. When `prefixTable`
     * is given (the persisted hv-bucketed layout), the candidate self-join
     * reads BOTH sides co-partitioned on `hv` — zero exchange — instead of
-    * deriving and shuffling prefixes per run; the pair set is identical
-    * under any lossless global prefix order (DedupSpec pins hash-order ==
-    * rarest-first), so the persisted hash-order table serves regardless of
-    * the rarestFirst flag. */
+    * deriving and shuffling prefixes per run. */
   private def jaccardPipelineOver(s: SparkSession, sh: DataFrame,
-                                  rarestFirst: Boolean,
                                   merge: Boolean,
                                   prefixTable: Option[DataFrame] = None): DataFrame = {
     val pt = prefixTable.getOrElse(
-      prefixesOf(s, sh, rarestFirst)
+      prefixesOf(s, sh)
         .cache()) // both sides of the self-join below
-    val cands = candidatesBetween(s, pt, pt, saltedPrefixes, DefaultSaltHotDf)
+    val cands = candidatesBetween(s, pt, pt)
     verifyPairsOf(s, sh, cands, merge)
   }
-
-  /** Flag for deterministic hot-prefix salting (default off): on Zipfian
-    * corpora a handful of prefix hashes land in millions of docs, making
-    * the candidate join's hottest `hv` partition the straggler; AQE
-    * skew-split is the implicit fallback, the salt below is the explicit
-    * plan. Settable per run via `-Dgraft.ppjoin.salted=true` or
-    * `GRAFT_PPJOIN_SALTED=true`. SCALE.md records the crossover. */
-  def saltedPrefixes: Boolean =
-    sys.props.get("graft.ppjoin.salted")
-      .orElse(sys.env.get("GRAFT_PPJOIN_SALTED"))
-      .exists(_.equalsIgnoreCase("true"))
-
-  /** df above which a prefix hash counts as hot; fan-out per hot key. The
-    * hot-key SET is bounded by |prefix rows| / HotDf, so the broadcast in
-    * candidatesBetween shrinks as the threshold rises — size it so the
-    * head you salt is the head that actually straggles. */
-  private[graft] val DefaultSaltHotDf = 64L
-  private[graft] val SaltFanout = 8L
 
   /** PPJoin candidate generation between two prefix tables (self-join when
     * `pa eq pb`). Both PPJoin bounds ride IN the join condition, pruning
@@ -261,21 +199,10 @@ object Dedup {
     * element always satisfies least(n−pos) ≥ τ/(1+τ)·(na+nb), so filtering
     * per matched element is lossless after distinct(). Shuffle-hash on the
     * equi key, never a broadcast (auto-broadcast at test SF would hide a
-    * plan that fails at 100 TB).
-    *
-    * With `salted = true`, rows whose `hv` is hot (document frequency >
-    * hotDf) join on (hv, salt) instead of bare hv: the a-side gets its own
-    * deterministic salt `xxhash64(doc_id) mod SaltFanout` and the b-side
-    * replicates each hot row to every salt value — each qualifying pair
-    * still meets EXACTLY once (at the a-row's salt), so the pair set is
-    * unchanged (DedupSpec pins parity on a Zipfian fixture) while the
-    * hottest key's work spreads over SaltFanout reducers. Cold keys keep
-    * salt 0 — no replication cost outside the Zipf head. The hot-key set
-    * (≤ |prefix rows|/hotDf keys by construction) is broadcast. */
+    * plan that fails at 100 TB). A hot `hv` partition on Zipfian corpora is
+    * left to AQE skew-split. */
   private[graft] def candidatesBetween(s: SparkSession,
-                                       pa: DataFrame, pb: DataFrame,
-                                       salted: Boolean,
-                                       hotDf: Long): DataFrame = {
+                                       pa: DataFrame, pb: DataFrame): DataFrame = {
     import s.implicits._
     val candReq = lit(Tau / (1.0 + Tau))
     val cond =
@@ -283,35 +210,7 @@ object Dedup {
         TF.sizeRatioPass($"a.n", $"b.n", Tau) &&
         least($"a.n" - $"a.pos", $"b.n" - $"b.pos").cast("double") >=
           candReq * ($"a.n" + $"b.n").cast("double")
-    val joined = if (!salted) {
-      pa.as("a").join(pb.hint("shuffle_hash").as("b"), cond)
-    } else {
-      // Hot keys from BOTH sides: a self-join sees one distribution (count
-      // pb once), but the asymmetric incremental use (a = corpus prefixes,
-      // b = batch prefixes) has its Zipf head on the a side — sampling
-      // only pb would under-salt exactly the keys that straggle. The
-      // combined df is the join-skew signal either way.
-      val hotSrc =
-        if (pa eq pb) pb.select($"hv")
-        else pa.select($"hv").unionAll(pb.select($"hv"))
-      val hot = broadcast(
-        hotSrc.groupBy($"hv").agg(count(lit(1)).as("df"))
-          .filter($"df" > hotDf)
-          .select($"hv", lit(true).as("is_hot")))
-      val aSalted = pa.join(hot, Seq("hv"), "left")
-        .withColumn("salt",
-          when($"is_hot", pmod(xxhash64($"doc_id"), lit(SaltFanout)))
-            .otherwise(lit(0L)))
-        .drop("is_hot")
-      val bSalted = pb.join(hot, Seq("hv"), "left")
-        .withColumn("salt",
-          explode(when($"is_hot", sequence(lit(0L), lit(SaltFanout - 1L)))
-            .otherwise(array(lit(0L)))))
-        .drop("is_hot")
-      aSalted.as("a").join(bSalted.hint("shuffle_hash").as("b"),
-        cond && $"a.salt" === $"b.salt")
-    }
-    joined
+    pa.as("a").join(pb.hint("shuffle_hash").as("b"), cond)
       .select($"a.doc_id".as("id_a"), $"b.doc_id".as("id_b"))
       .distinct()
   }
@@ -349,8 +248,7 @@ object Dedup {
   val bucketed: GraftQuery = GraftQuery(
     "llm_dedup_bucketed",
     (s, dir) =>
-      jaccardPipelineOver(s, bucketedSignatures(s, dir), rarestFirstPrefixes,
-        merge = true),
+      jaccardPipelineOver(s, bucketedSignatures(s, dir), merge = true),
     Some(jaccardOracle)
   )
 
@@ -360,7 +258,7 @@ object Dedup {
     * `hv`, so persisting corpus prefixes CLUSTERED BY hv lets every
     * incremental run read the corpus side of that join EXCHANGE-FREE: the
     * bucketed scan's HashPartitioning(hv, 8) satisfies the join's clustered
-    * distribution (also under salting — {hv} ⊆ {hv, salt}), and only the
+    * distribution, and only the
     * O(batch) side shuffles to the bucket count. Derived once from the
     * persisted signature layout (slice + posexplode, no shuffle);
     * re-registered, not rewritten, on later sessions — same convention as
@@ -380,7 +278,7 @@ object Dedup {
           LOCATION '$path'"""
     } {
       import s.implicits._
-      prefixesOf(s, bucketedSignatures(s, dir), rarestFirst = false)
+      prefixesOf(s, bucketedSignatures(s, dir))
         .repartition(8, $"hv")
         .write.bucketBy(8, "hv").sortBy("hv")
         .option("path", path).mode("overwrite").saveAsTable(tbl)
@@ -571,7 +469,7 @@ object Dedup {
     * query is scale-factor-independent (cf. ingest_incremental). */
   val incremental: GraftQuery = GraftQuery(
     "llm_dedup_incremental",
-    (s, dir) => incrementalPipeline(s, dir, saltedPrefixes),
+    (s, dir) => incrementalPipeline(s, dir),
     Some("""WITH wm AS (SELECT CAST(floor(max(doc_id) / 2.0) AS BIGINT) AS w
                         FROM documents),
             sh AS (
@@ -595,11 +493,10 @@ object Dedup {
     // Plan gates audit the UN-memoized pipeline (ADVICE r15): the served
     // form is a SessionMemo checkpoint scan after the first build.
     auditPlans = Some((s, dir) =>
-      Seq(incrementalPipelineBuild(s, dir, saltedPrefixes)))
+      Seq(incrementalPipelineBuild(s, dir)))
   )
 
   private[graft] def incrementalPipeline(s: SparkSession, dir: String,
-                                         salted: Boolean,
                                          persistedPrefixes: Boolean = true): DataFrame =
     // Session memo (r15): llm_dedup_incremental's graded output IS this
     // pair set, and llm_dedup_cluster_incremental re-derives the same
@@ -607,16 +504,15 @@ object Dedup {
     // build + checkpoint once per session, read twice (the pair sink a
     // real incremental run would have just written).
     graft.SessionMemo.frame(s,
-        s"incPairs|$salted|$persistedPrefixes|$dir") {
-      incrementalPipelineBuild(s, dir, salted, persistedPrefixes)
+        s"incPairs|$persistedPrefixes|$dir") {
+      incrementalPipelineBuild(s, dir, persistedPrefixes)
         .localCheckpoint()
     }
 
   /** The un-memoized pipeline plan — DedupSpec pins its exchange counts
-    * (persisted vs derived prefixes, salted vs not), which the session
+    * (persisted vs derived prefixes), which the session
     * memo's checkpoint scan would otherwise hide. */
   private[graft] def incrementalPipelineBuild(s: SparkSession, dir: String,
-                                              salted: Boolean,
                                               persistedPrefixes: Boolean = true): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
@@ -642,8 +538,8 @@ object Dedup {
       if (persistedPrefixes)
         bucketedPrefixes(s, dir).join(broadcast(wm), $"doc_id" <= $"wm")
           .select($"doc_id", $"n", $"pos", $"hv")
-      else prefixesOf(s, corpusSh, rarestFirst = false)
-    dedupIncrement(s, corpusSh, pCorpus, None, batchSh, salted)
+      else prefixesOf(s, corpusSh)
+    dedupIncrement(s, corpusSh, pCorpus, None, batchSh)
       .orderBy($"id_a", $"id_b")
   }
 
@@ -669,20 +565,19 @@ object Dedup {
   private[graft] def dedupIncrement(s: SparkSession,
                                     base: DataFrame, basePrefixes: DataFrame,
                                     delta: Option[DataFrame],
-                                    waveSh: DataFrame,
-                                    salted: Boolean): DataFrame = {
-    val pWave = prefixesOf(s, waveSh, rarestFirst = false).cache()
-    val baseCands = candidatesBetween(s, basePrefixes, pWave, salted, DefaultSaltHotDf)
+                                    waveSh: DataFrame): DataFrame = {
+    val pWave = prefixesOf(s, waveSh).cache()
+    val baseCands = candidatesBetween(s, basePrefixes, pWave)
     val basePairs = verifyPairsSides(s, base, "merge",
       waveSh, "shuffle_hash", baseCands)
     val deltaPairs = delta.map { d =>
       // Delta prefixes re-derive by scan projection (slice + posexplode,
       // no shuffle); the delta stays O(batch arrivals), not O(corpus).
-      val pd = prefixesOf(s, d, rarestFirst = false)
-      val cands = candidatesBetween(s, pd, pWave, salted, DefaultSaltHotDf)
+      val pd = prefixesOf(s, d)
+      val cands = candidatesBetween(s, pd, pWave)
       verifyPairsSides(s, d, "shuffle_hash", waveSh, "shuffle_hash", cands)
     }
-    val selfCands = candidatesBetween(s, pWave, pWave, salted, DefaultSaltHotDf)
+    val selfCands = candidatesBetween(s, pWave, pWave)
     val selfPairs = verifyPairsSides(s, waveSh, "shuffle_hash",
       waveSh, "shuffle_hash", selfCands)
     (Seq(basePairs) ++ deltaPairs :+ selfPairs).reduce(_.unionAll(_))
@@ -1158,7 +1053,7 @@ object Dedup {
           LOCATION '$path'"""
     } {
       val pairs = jaccardPipelineOver(s, bucketedSignatures(s, dir),
-          rarestFirstPrefixes, merge = true,
+          merge = true,
           prefixTable = Some(bucketedPrefixes(s, dir)))
         .select($"id_a".as("src"), $"id_b".as("dst"))
       connectedComponents(pairs)
@@ -1249,8 +1144,7 @@ object Dedup {
       val pCorpus = bucketedPrefixes(s, dir)
         .join(broadcast(wm), $"doc_id" <= $"wm")
         .select($"doc_id", $"n", $"pos", $"hv")
-      val cands = candidatesBetween(s, pCorpus, pCorpus,
-        saltedPrefixes, DefaultSaltHotDf)
+      val cands = candidatesBetween(s, pCorpus, pCorpus)
       val corpusPairs = verifyPairsSides(s, corpusSh, "merge",
           corpusSh, "merge", cands)
         .select($"id_a".as("src"), $"id_b".as("dst"))
@@ -1292,7 +1186,7 @@ object Dedup {
       // incremental pipeline — the single most expensive subtree here.
       // The checkpoint holds O(new pairs) id rows, exactly the state a
       // real incremental run would have just written to its pair sink.
-      val newPairs = incrementalPipeline(s, dir, saltedPrefixes)
+      val newPairs = incrementalPipeline(s, dir)
         .select($"id_a".as("src"), $"id_b".as("dst"))
         .localCheckpoint()
       mergeLabels(oldLabels, newPairs)
@@ -1308,11 +1202,11 @@ object Dedup {
     // newPairs is a checkpoint by design there, exactly as in `run`).
     auditPlans = Some((s, dir) => {
       import s.implicits._
-      val newPairs = incrementalPipeline(s, dir, saltedPrefixes)
+      val newPairs = incrementalPipeline(s, dir)
         .select($"id_a".as("src"), $"id_b".as("dst"))
         .localCheckpoint()
       Seq(
-        incrementalPipelineBuild(s, dir, saltedPrefixes),
+        incrementalPipelineBuild(s, dir),
         mergeLabels(corpusLabels(s, dir), newPairs)
           .withColumn("cluster_size",
             count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy($"cid")))

@@ -158,8 +158,14 @@ object TextStats {
   )
 
   /** Composite quality score: saturating length terms + stopword density,
-    * bucketed. The formula is integer-over-constant double arithmetic —
-    * identical FP sequence in both engines, rounded only at the end. */
+    * bucketed. With n tokens, k stopwords and c characters the score is
+    * min(n,50)/100 + 3k/(10n) + min(c,300)/1500 = num / (1500·n), where
+    * num = 15·n·min(n,50) + 450·k + n·min(c,300). Both engines round that
+    * exact rational half-up to 4 places in BIGINT arithmetic,
+    * (20000·num + den) div (2·den). Rounding a double sum instead breaks
+    * ties differently: Spark rounds the decimal string half-up, DuckDB
+    * does not (n=16, k=1, c=39 is exactly 0.20475: Spark 0.2048, DuckDB
+    * 0.2047). The score is NULL when n = 0. */
   /** (doc_id, score): the llm_quality composite score as a reusable frame
     * — shared by llm_quality and llm_dedup_keep_best (quality-based
     * cluster-representative selection). Rounded here (4 dp) so downstream
@@ -174,26 +180,28 @@ object TextStats {
     import s.implicits._
     docs
       .withColumn("toks", TF.tokens($"text"))
-      .withColumn("n_tokens", size($"toks"))
-      .withColumn("stop_ratio",
-        size(filter($"toks", t => t === "the" || t === "a" || t === "of"))
-          .cast("double") / $"n_tokens".cast("double"))
-      .withColumn("score", round(
-        least($"n_tokens".cast("double") / 50.0, lit(1.0)) * 0.5 +
-        $"stop_ratio" * 0.3 +
-        least($"n_chars".cast("double") / 300.0, lit(1.0)) * 0.2, 4))
+      .withColumn("q_n", size($"toks").cast("long"))
+      .withColumn("q_num",
+        lit(15L) * $"q_n" * least($"q_n", lit(50L)) +
+        lit(450L) * size(filter($"toks", t => t === "the" || t === "a" || t === "of")) +
+        $"q_n" * least($"n_chars".cast("long"), lit(300L)))
+      .withColumn("q_den", lit(1500L) * $"q_n")
+      .withColumn("score", when($"q_n" > 0,
+        expr("(20000 * q_num + q_den) div (2 * q_den)").cast("double") / 10000.0))
       .select($"doc_id", $"score")
   }
 
   /** The llm_quality oracle's score expression, for composition into
     * other oracles (keeps the two SQL forms literally identical). */
-  private[graft] val scoreSql: String =
-    """round(
-         least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 50.0, 1.0) * 0.5 +
-         CAST(len(list_filter(string_split(text, ' '),
-              t -> t IN ('the', 'a', 'of'))) AS DOUBLE)
-           / CAST(len(string_split(text, ' ')) AS DOUBLE) * 0.3 +
-         least(CAST(n_chars AS DOUBLE) / 300.0, 1.0) * 0.2, 4)"""
+  private[graft] val scoreSql: String = {
+    val n = "CAST(len(string_split(text, ' ')) AS BIGINT)"
+    val k = "CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'of'))) AS BIGINT)"
+    val num = s"(15 * $n * least($n, 50) + 450 * $k + $n * least(CAST(n_chars AS BIGINT), 300))"
+    val den = s"(1500 * $n)"
+    s"""(CASE WHEN $n > 0
+              THEN CAST((20000 * $num + $den) // (2 * $den) AS DOUBLE) / CAST(10000 AS DOUBLE)
+         END)"""
+  }
 
   val quality: GraftQuery = GraftQuery(
     "llm_quality",

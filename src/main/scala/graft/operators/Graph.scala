@@ -441,8 +441,8 @@ object Graph {
     * degrees ride the leg rows as `ddeg`, so downstream needs no degree
     * join at all: the whole pipeline is bucketed-join → one (a,b)
     * aggregate exchange → project. Factored out so graph_jaccard /
-    * graph_jaccard_capped and the hub-skew drive (GraphSpec +
-    * MicroBench; round-8 verdict item 4) enumerate through ONE code
+    * graph_jaccard_capped and the hub-skew drive (GraphSpec; round-8
+    * verdict item 4) enumerate through ONE code
     * path — the measured capped-vs-uncapped wedge counts grade exactly
     * the production operators. */
   private[graft] def wedgeCommon(adj: DataFrame, cap: Option[Int]): DataFrame = {
@@ -846,7 +846,7 @@ object Graph {
     // so a frontier restriction (recompute only dsts with a changed
     // in-neighbor) is value-identical to the full recompute — but it
     // only pays if the changed set SHRINKS. Measured on this graph
-    // (graft.DebugLpa, sf0.1, V=5922 E=7146): changed counts are
+    // (sf0.1, V=5922 E=7146): per-round changed-label counts are
     // 5922, 5920, 5919, 5919, 5919... for 8 straight rounds —
     // synchronous LPA OSCILLATES here (the known 2-cycle of the
     // synchronous update; Raghavan §4), so the frontier is ≈V every
@@ -1729,17 +1729,7 @@ object Graph {
     * per-side aggregates are lineage-cut per half-round (the
     * pagerank_delta discipline), with normalization left as a lazy
     * projection so each O(E) join+aggregate executes exactly once. */
-  /** Checkpoint cadence for the HITS fixpoint, in HALF-rounds: 1 = the
-    * r15 per-half-round form, 2 = the r16 per-full-round form (whose
-    * bench rows came out flat-to-worse — r16 verdict item 3 orders the
-    * adjudication), 4 = two full rounds per cut. r17 measured all three
-    * in one quiet window (see OPTIMIZATION_r17.md); the winner is
-    * pinned here. Values are bit-identical under any cadence:
-    * checkpoint placement never changes arithmetic. */
-  private val HitsHalfRoundsPerCkpt = 1
-
-  private[graft] def hitsPipeline(s: SparkSession, dir: String,
-                                  halfPerCkpt: Int): DataFrame = {
+  private def hitsPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // One fingerprint pass shared by both layouts, forced ONLY on the
     // cold (build/re-register) path — warm serves skip the scans (r16).
@@ -1751,37 +1741,28 @@ object Graph {
       .select($"c", (lit(1.0) / $"n").as("h"))
       .localCheckpoint()
     var a: DataFrame = null
-    var aCut = false // was the LAST a-half materialized?
-    var half = 0
     for (_ <- 1 to HitsIters) {
-      // An un-checkpointed half-round stays lazy inside the next
-      // materialized plan — its aggregate subtree appears twice there
-      // (under the normalizer broadcast and under the next join) and is
-      // planned/executed once within that one action (ReusedExchange /
-      // AQE stage reuse). (The r14 2× trap was checkpointing the
-      // NORMALIZED vector — whose normalizer job and checkpoint job
-      // could not share a stage across separate actions.)
-      val araw0 = ebc.join(h.hint("shuffle_hash"), "c")
+      // Every half-round's RAW aggregate is cut: r17 measured cuts every
+      // half-round against every full round and every two full rounds in
+      // one quiet window (OPTIMIZATION_r17.md), and per-half-round won.
+      // Checkpoint placement never changes arithmetic. Cutting the RAW
+      // aggregate, not the normalized vector, lets the normalizer and the
+      // next join read one materialization (the r14 2× trap was
+      // checkpointing the NORMALIZED vector — whose normalizer job and
+      // checkpoint job could not share a stage across separate actions).
+      val araw = ebc.join(h.hint("shuffle_hash"), "c")
         .groupBy($"p").agg(sum($"h").as("a"))
-      half += 1
-      aCut = half % halfPerCkpt == 0
-      val araw = if (aCut) araw0.localCheckpoint() else araw0
+        .localCheckpoint()
       val asum = araw.agg(sum($"a").as("sa"))
       a = araw.crossJoin(broadcast(asum))
         .select($"p", ($"a" / $"sa").as("a"))
-      val hraw0 = ebp.join(a.hint("shuffle_hash"), "p")
+      val hraw = ebp.join(a.hint("shuffle_hash"), "p")
         .groupBy($"c").agg(sum($"a").as("h"))
-      half += 1
-      val hraw = if (half % halfPerCkpt == 0) hraw0.localCheckpoint() else hraw0
+        .localCheckpoint()
       val hsum = hraw.agg(sum($"h").as("sh"))
       h = hraw.crossJoin(broadcast(hsum))
         .select($"c", ($"h" / $"sh").as("h"))
     }
-    // Materialize the final auth vector once when its half-round wasn't
-    // (ADVICE r16): the closing union/orderBy action would otherwise
-    // re-execute the last a-half's O(E) join+aggregate from scratch —
-    // ReusedExchange only dedups within one action.
-    if (!aCut) a = a.localCheckpoint()
     h.select(lit("hub").as("side"), $"c".as("id"), round($"h", 6).as("score"))
       .unionByName(a.select(lit("auth").as("side"), $"p".as("id"),
         round($"a", 6).as("score")))
@@ -1790,7 +1771,7 @@ object Graph {
 
   val hits: GraftQuery = GraftQuery(
     "graph_hits",
-    (s, dir) => hitsPipeline(s, dir, HitsHalfRoundsPerCkpt),
+    hitsPipeline,
     Some {
       // MATERIALIZED, not plain, CTEs: each round references the prior
       // one twice (the aggregate + its normalizer scalar subquery), and
@@ -2425,12 +2406,6 @@ object Graph {
     * Edges must arrive intra-subproblem (every (pid, src, dst) row has
     * both endpoints live in pid) — both callers construct exactly that,
     * so no membership re-filter runs inside the loop. */
-  /** Visited-union consolidation stride for keyedReach, in rounds.
-    * Adjudicated 8 vs 4 in r17 (interleaved A/B, see AdjBench +
-    * OPTIMIZATION_r17.md); values identical under any stride (union of
-    * the same parts). Mutable ONLY as the AdjBench measurement hook. */
-  private[graft] var ReachConsolidateEvery = 8
-
   private def keyedReach(s: SparkSession, edges0: DataFrame,
                          seeds: DataFrame, who: String): DataFrame = {
     import s.implicits._
@@ -2468,9 +2443,10 @@ object Graph {
           // per round — the anti-join re-plans and re-shuffles O(rounds)
           // legs each round, an O(rounds²) driver+exchange tower for a
           // set whose SIZE is just O(V). One extra blocking job per 8
-          // rounds caps the legs at 8. Values unchanged: union of the
-          // same parts.
-          if (visitedParts.length >= ReachConsolidateEvery)
+          // rounds caps the legs at 8; r17 adjudicated stride 8 against 4
+          // in an interleaved A/B (OPTIMIZATION_r17.md). Values unchanged
+          // under any stride: union of the same parts.
+          if (visitedParts.length >= 8)
             visitedParts = List(visited.localCheckpoint())
           frontier = nxt
           rounds += 1

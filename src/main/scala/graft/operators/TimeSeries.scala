@@ -625,7 +625,7 @@ object TimeSeries {
     * Scale shape — TWO-LEVEL per-user windows (round-13 hot-key fix): a
     * single `partitionBy(user_id)` window funnels a degenerate bot user
     * (10⁶+ events — exactly what the journey family exists to study)
-    * into ONE task's sort; the r13 MicroBench journey-skew drive
+    * into ONE task's sort; the r13 journey-skew drive
     * measured 3.4× vs a same-cardinality control at a 4M-event bot,
     * growing with bot size. The fix is the twoLevelRank idea applied per
     * user: windows partition by (user_id, day) — the hot task now sorts

@@ -38,12 +38,6 @@ object DedupStream {
   /** Number of emulated arrival waves in the graded form. */
   private val Waves = 3
 
-  /** AdjBench measurement hook ONLY: `false` restores the r16
-    * `.cache()` form of the shared batch shingle frame so the r17
-    * checkpoint form can be A/B'd interleaved. Values identical either
-    * way (same rows, different materialization). */
-  private[graft] var BatchShCheckpoint = true
-
   val streamDedupIncremental: GraftQuery = GraftQuery(
     "stream_dedup_incremental",
     (s, dir) => {
@@ -70,11 +64,9 @@ object DedupStream {
       // makes each wave plan a flat in-memory scan, which is also the
       // truer emulation (the real form READS an appended parquet delta,
       // it does not re-derive shingles per wave).
-      val batchShPlan = Dedup.shingleOf(s,
+      val batchSh = Dedup.shingleOf(s,
           docs.join(broadcast(bounds), $"doc_id" > $"wm").select($"doc_id", $"text"))
-      val batchSh =
-        if (BatchShCheckpoint) batchShPlan.localCheckpoint()
-        else batchShPlan.cache()
+        .localCheckpoint()
       def shSlice(cond: Column): DataFrame =
         batchSh.join(broadcast(bounds), cond)
           .select($"doc_id", $"shingles", $"n")
@@ -91,8 +83,7 @@ object DedupStream {
         val waveSh = shSlice($"doc_id" > waveEdge(k) && $"doc_id" <= waveEdge(k + 1))
         val delta = if (k == 0) None
                     else Some(shSlice($"doc_id" <= waveEdge(k)))
-        Dedup.dedupIncrement(s, baseSh, basePrefixes, delta, waveSh,
-          Dedup.saltedPrefixes)
+        Dedup.dedupIncrement(s, baseSh, basePrefixes, delta, waveSh)
           // Materialize each wave's (small) pair set eagerly — exactly how
           // the true streaming form executes (one DAG per micro-batch,
           // appended to the sink), instead of one 3-wave mega-plan that

@@ -25,49 +25,6 @@ class DedupSpec extends AnyFunSuite {
     assert(a.nonEmpty) // fixture plants near-dup pairs by construction
   }
 
-  test("PPJoin rarest-first prefix order finds the identical pair set") {
-    // Both prefix orders are global total orders, so prefix filtering is
-    // lossless under either; the final verified pair sets must be equal.
-    val hashOrder = llm.Dedup.ngramJaccardPipeline(spark, TestSpark.Sf, rarestFirst = false)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val dfOrder = llm.Dedup.ngramJaccardPipeline(spark, TestSpark.Sf, rarestFirst = true)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(hashOrder === dfOrder)
-    assert(hashOrder.nonEmpty)
-  }
-
-  test("salted PPJoin candidate join: identical pair set on a Zipfian fixture") {
-    // Zipfian corpus: a 10-token preamble shared by EVERY doc (its 3-gram
-    // hashes are the Zipf head — df = 120), an 8-way mid tier, and a
-    // unique tail per doc. Hot prefix hashes therefore far exceed the
-    // test's hotDf, so the salted path's replicate/meet-once argument is
-    // actually exercised, not vacuously skipped.
-    val docs = (1 to 120).map { i =>
-      val hot = (0 until 10).map(j => s"the$j")
-      val mid = (0 until 6).map(j => s"mid${i % 8}_$j")
-      val uniq = (0 until 12).map(j => s"u${i}_$j")
-      (i.toLong, (hot ++ mid ++ uniq).mkString(" "))
-    }.toDF("doc_id", "text")
-    val sh = llm.Dedup.shingleOf(spark, docs).cache()
-    val prefixTable = llm.Dedup.prefixesOf(spark, sh, rarestFirst = false).cache()
-
-    val hotDf = 16L
-    val maxDf = prefixTable.groupBy($"hv").count()
-      .agg(max($"count")).collect()(0).getLong(0)
-    assert(maxDf > hotDf,
-      s"fixture must contain hot prefix hashes (max df=$maxDf <= hotDf=$hotDf)")
-
-    def pairs(salted: Boolean) =
-      llm.Dedup.candidatesBetween(spark, prefixTable, prefixTable, salted, hotDf)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val unsalted = pairs(salted = false)
-    val salted = pairs(salted = true)
-    // Each qualifying pair must meet EXACTLY once under salting (at the
-    // a-row's deterministic salt): the candidate sets are identical.
-    assert(salted === unsalted)
-    assert(unsalted.nonEmpty, "Zipf head must generate candidates")
-  }
-
   test("minhash signature agreement approximates jaccard on planted pairs") {
     val sigs = llm.Dedup.minhashSignatures(spark, TestSpark.Sf)
     val pairs = llm.Dedup.ngramJaccard.run(spark, TestSpark.Sf).limit(5)
@@ -191,7 +148,7 @@ class DedupSpec extends AnyFunSuite {
     // re-shingled and never re-shuffled. Audited on the BUILD form: the
     // graded query's plan is the session memo's checkpoint scan.
     val plan = llm.Dedup
-      .incrementalPipelineBuild(spark, TestSpark.Sf, salted = true)
+      .incrementalPipelineBuild(spark, TestSpark.Sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("Bucketed: true"),
       "corpus signatures must come from the persisted bucketed layout")
@@ -207,9 +164,9 @@ class DedupSpec extends AnyFunSuite {
     // The BUILD form, not the memoized query path: these assertions pin
     // the pipeline PLAN (exchange counts, bucketed scans), which the
     // session memo's checkpoint scan would hide.
-    val persisted = llm.Dedup.incrementalPipelineBuild(spark, TestSpark.Sf, salted = false)
+    val persisted = llm.Dedup.incrementalPipelineBuild(spark, TestSpark.Sf)
     val derived = llm.Dedup.incrementalPipelineBuild(spark, TestSpark.Sf,
-      salted = false, persistedPrefixes = false)
+      persistedPrefixes = false)
     val p = persisted.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val d = derived.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(p === d)
@@ -223,17 +180,6 @@ class DedupSpec extends AnyFunSuite {
     val dPlan = derived.queryExecution.executedPlan.toString
     assert(nEx(pPlan) < nEx(dPlan),
       s"persisted=${nEx(pPlan)} exchanges vs derived=${nEx(dPlan)}")
-  }
-
-  test("incremental dedup: salted and unsalted asymmetric candidate joins agree") {
-    // End-to-end parity through the asymmetric (corpus-prefix vs
-    // batch-prefix) salted path — complements the self-join Zipfian unit.
-    val off = llm.Dedup.incrementalPipelineBuild(spark, TestSpark.Sf, salted = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val on = llm.Dedup.incrementalPipelineBuild(spark, TestSpark.Sf, salted = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(on === off)
-    assert(off.nonEmpty)
   }
 
   test("incremental clustering: merged labels equal a full re-run, spanning the watermark") {

@@ -58,4 +58,33 @@ class PcaParitySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("two pcaQuantGram columns compile in one generated projection") {
+    import spark.implicits._
+    // A non-nullable child puts the kernel body unbraced in the enclosing
+    // method, so both kernels share one Java scope; with fallback off a
+    // clash of generated local names fails the query instead of silently
+    // running interpreted.
+    val key = "spark.sql.codegen.fallback"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val emb = array(($"id" + 1).cast("float"), ($"id" - 2).cast("float"))
+      val df = spark.range(3).select(
+        VectorFunctions.pcaQuantGram(spark, emb).as("g"),
+        VectorFunctions.pcaQuantGram(spark, reverse(emb)).as("r"))
+      assert(!df.schema("g").nullable && !df.schema("r").nullable,
+        "the test needs non-nullable kernel inputs")
+      def gram(x: Seq[Double]): Seq[Long] =
+        (for (a <- x; b <- x) yield math.floor(a * b * 1e4).toLong) ++
+          x.map(a => math.floor(a * 1e6).toLong)
+      val rows = df.collect()
+      assert(rows.length === 3)
+      rows.zipWithIndex.foreach { case (r, id) =>
+        val x = Seq((id + 1).toDouble, (id - 2).toDouble)
+        assert(r.getSeq[Long](0) === gram(x))
+        assert(r.getSeq[Long](1) === gram(x.reverse))
+      }
+    } finally spark.conf.set(key, prior)
+  }
 }

@@ -164,7 +164,7 @@ class PlanAuditSpec extends AnyFunSuite {
     * EXACTLY one user-scale key (user_id / doc_id) whose input is
     * UN-REDUCED scan rows funnels a degenerate hot key — the 4M-event
     * bot user the journey family exists to study — into ONE task's
-    * sort; the r13 MicroBench skew ladder measured 3.1–3.5× vs
+    * sort; the r13 skew ladder measured 3.1–3.5× vs
     * same-size controls. Journey windows must two-level by
     * (key, day)/(key, bucket) with a boundary-table carry (see
     * TimeSeries.sessionFrame); windows over REDUCED frames (per-(user,

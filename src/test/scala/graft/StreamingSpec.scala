@@ -808,8 +808,7 @@ class StreamingSpec extends AnyFunSuite {
             if (new java.io.File(state, "_SUCCESS").exists())
               Some(spark.read.parquet(state))
             else None
-          llm.Dedup.dedupIncrement(spark, baseSh, basePref, delta, waveSh,
-              salted = false)
+          llm.Dedup.dedupIncrement(spark, baseSh, basePref, delta, waveSh)
             .write.mode("append").parquet(out)
           waveSh.write.mode("append").parquet(state)
           waveSh.unpersist()
@@ -875,7 +874,7 @@ class StreamingSpec extends AnyFunSuite {
               Some(spark.read.parquet(deltaDir))
             else None
           val newPairs = llm.Dedup.dedupIncrement(spark, baseSh, basePref,
-              delta, waveSh, salted = false)
+              delta, waveSh)
             .select($"id_a".as("src"), $"id_b".as("dst"))
           val merged = llm.Dedup.mergeLabels(
             spark.read.parquet(s"$state/v$stateVersion"), newPairs)
