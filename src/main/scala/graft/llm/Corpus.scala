@@ -133,9 +133,7 @@ object Corpus {
     * the thing a pipeline materializes beside its eval-set registry. */
   private[graft] def contaminatedIds(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_contam/$sfx"
-    Layouts.parquetLayout(path, path,
+    Layouts.parquet(s, Layouts.pathOf("contam", dir),
         Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text")) {
       val sigs = gramSigs(s, Tables.documents(s, dir)).cache()
       val grams = sigs.select($"doc_id", explode($"ghs").as("gh"))
@@ -147,9 +145,7 @@ object Corpus {
         .agg(count(lit(1)).as("n_shared"))
         .filter($"n_shared" >= DecontamMinHits)
         .select($"doc_id")
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   val decontaminate: GraftQuery = GraftQuery(
@@ -689,18 +685,14 @@ object Corpus {
     * column a signal derives from: text (quality/dedup/contamination),
     * source (the LM's training slice), lang (carried into the output). */
   private[graft] def curatedKeepList(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_keep/$sfx"
     // The meta leads with the scoring version: the keep-list is filtered
     // on quality scores, so a score change must rebuild it even when the
     // documents are unchanged.
-    Layouts.parquetLayout(path, path, s"$KeepListVersion:" +
+    Layouts.parquet(s, Layouts.pathOf("keep", dir), s"$KeepListVersion:" +
         Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text", "source", "lang")) {
       curateBatch(s, dir, Tables.documents(s, dir),
           perplexityScores(s, dir), Dedup.clusterKeepers(s, dir))
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Version of the signals stored in the keep-list; bump it when a
@@ -805,16 +797,12 @@ object Corpus {
     * layout carries the whole model. */
   private[graft] def lmCounts(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_lm/$sfx/bigram"
-    Layouts.parquetLayout(path, path,
+    Layouts.parquet(s, Layouts.pathOf("lm", dir, "bigram"),
         Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text", "source")) {
       docBigrams(s, Tables.documents(s, dir))
         .filter($"source" === PplRefSource)
         .groupBy($"w1", $"w2").agg(count(lit(1)).as("cb"))
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The frozen LM's three materialized pieces: bigram counts (w1, w2,
@@ -834,14 +822,12 @@ object Corpus {
     * the artifact: a trained model ships WITH its normalization
     * constants. All three pieces persist under one fingerprint (the
     * roll-ups derive deterministically from the counts, so one meta
-    * stamp covers the set; the vocab dir is the success probe — a crash
-    * between writes rebuilds). */
+    * stamp covers the set). */
   private[graft] def lmModel(s: SparkSession, dir: String): LmModel = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val uPath = s"/tmp/graft_lm/$sfx/unigram"
-    val vPath = s"/tmp/graft_lm/$sfx/vocab"
-    Layouts.parquetLayout(uPath, vPath,
+    val uPath = Layouts.pathOf("lm", dir, "unigram")
+    val vPath = Layouts.pathOf("lm", dir, "vocab")
+    Layouts.persisted(uPath,
         Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text", "source")) {
       val bc = lmCounts(s, dir)
       bc.groupBy($"w1").agg(sum($"cb").as("cw1"))
@@ -890,14 +876,10 @@ object Corpus {
     * consumer. The fingerprint covers text AND source because the LM is
     * trained on the source slice. */
   private[graft] def perplexityScores(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_nll/$sfx"
-    Layouts.parquetLayout(path, path,
+    Layouts.parquet(s, Layouts.pathOf("nll", dir),
         Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text", "source")) {
       scoreBigrams(s, docBigrams(s, Tables.documents(s, dir)), lmModel(s, dir))
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** BM25 ranked retrieval — the lexical scoring function behind every
@@ -987,16 +969,12 @@ object Corpus {
     * protocol, one artifact family). */
   private[graft] def lmTrigrams(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_lm/$sfx/trigram"
-    Layouts.parquetLayout(path, path,
+    Layouts.parquet(s, Layouts.pathOf("lm", dir, "trigram"),
         Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text", "source")) {
       docTrigrams(s, Tables.documents(s, dir))
         .filter($"source" === PplRefSource)
         .groupBy($"w1", $"w2", $"w3").agg(count(lit(1)).as("ct"))
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Trigram LM scoring with STUPID BACKOFF (Brants et al. 2007) — the
@@ -1027,13 +1005,9 @@ object Corpus {
     * per consumer/session (warm cost drops from the full 4-join scoring
     * dataflow to a layout read). */
   private[graft] def trigramScores(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_nll3/$sfx"
-    Layouts.parquetLayout(path, path,
-        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text", "source")) {
-      scoreTrigramsOnce(s, dir).write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
+    Layouts.parquet(s, Layouts.pathOf("nll3", dir),
+        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text", "source"))(
+      scoreTrigramsOnce(s, dir))
   }
 
   private def scoreTrigramsOnce(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {

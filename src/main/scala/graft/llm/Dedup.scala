@@ -227,22 +227,9 @@ object Dedup {
     * re-registered (not rewritten) on later sessions. Shared by
     * `llm_dedup_bucketed` and `llm_dedup_cluster`. */
   private[graft] def bucketedSignatures(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val tbl = s"graft_signatures_$sfx"
-    val path = s"/tmp/graft_signatures/$sfx"
-    Layouts.table(s, tbl, path,
-        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text")) {
-      // layout on disk from an earlier session — re-register the
-      // external bucketed table (bucket ids live in the filenames).
-      s"""CREATE TABLE $tbl
-          (`doc_id` BIGINT, `shingles` ARRAY<BIGINT>, `n` INT)
-          USING PARQUET
-          CLUSTERED BY (doc_id) SORTED BY (doc_id) INTO 8 BUCKETS
-          LOCATION '$path'"""
-    } {
-      shingled(s, dir).write.bucketBy(8, "doc_id").sortBy("doc_id")
-        .option("path", path).mode("overwrite").saveAsTable(tbl)
-    }
+    Layouts.table(s, "signatures", dir,
+        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text"),
+        8, Seq("doc_id"))(shingled(s, dir))
   }
 
   val bucketed: GraftQuery = GraftQuery(
@@ -266,22 +253,11 @@ object Dedup {
     * their bucket so the file count is exactly the bucket count, not
     * tasks × buckets (the round-3 ingest_partition_bucket fan-out lesson). */
   private[graft] def bucketedPrefixes(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val tbl = s"graft_prefixes_$sfx"
-    val path = s"/tmp/graft_prefixes/$sfx"
-    Layouts.table(s, tbl, path,
-        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text")) {
-      s"""CREATE TABLE $tbl
-          (`doc_id` BIGINT, `n` INT, `pos` INT, `hv` BIGINT)
-          USING PARQUET
-          CLUSTERED BY (hv) SORTED BY (hv) INTO 8 BUCKETS
-          LOCATION '$path'"""
-    } {
+    Layouts.table(s, "prefixes", dir,
+        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text"),
+        8, Seq("hv")) {
       import s.implicits._
-      prefixesOf(s, bucketedSignatures(s, dir))
-        .repartition(8, $"hv")
-        .write.bucketBy(8, "hv").sortBy("hv")
-        .option("path", path).mode("overwrite").saveAsTable(tbl)
+      prefixesOf(s, bucketedSignatures(s, dir)).repartition(8, $"hv")
     }
   }
 
@@ -1042,24 +1018,14 @@ object Dedup {
     * reads it co-partitioned and exchange-free. */
   private[graft] def fullLabels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val tbl = s"graft_full_labels_$sfx"
-    val path = s"/tmp/graft_full_labels/$sfx"
-    Layouts.table(s, tbl, path,
-        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text")) {
-      s"""CREATE TABLE $tbl (`v` BIGINT, `cid` BIGINT)
-          USING PARQUET
-          CLUSTERED BY (v) SORTED BY (v) INTO 8 BUCKETS
-          LOCATION '$path'"""
-    } {
+    Layouts.table(s, "full_labels", dir,
+        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text"),
+        8, Seq("v")) {
       val pairs = jaccardPipelineOver(s, bucketedSignatures(s, dir),
           merge = true,
           prefixTable = Some(bucketedPrefixes(s, dir)))
         .select($"id_a".as("src"), $"id_b".as("dst"))
-      connectedComponents(pairs)
-        .repartition(8, $"v")
-        .write.bucketBy(8, "v").sortBy("v")
-        .option("path", path).mode("overwrite").saveAsTable(tbl)
+      connectedComponents(pairs).repartition(8, $"v")
     }
   }
 
@@ -1118,20 +1084,13 @@ object Dedup {
     * incremental merge's reduced-graph labels equal a full re-run's. */
   private[graft] def corpusLabels(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val tbl = s"graft_labels_$sfx"
-    val path = s"/tmp/graft_labels/$sfx"
     // The fingerprint also covers the baked-in watermark: the derived
     // midpoint is a pure function of max(doc_id), which the fingerprint
     // carries — a fixture change invalidates rather than silently merging
     // new batches into stale labels.
-    Layouts.table(s, tbl, path,
-        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text")) {
-      s"""CREATE TABLE $tbl (`v` BIGINT, `cid` BIGINT)
-          USING PARQUET
-          CLUSTERED BY (v) SORTED BY (v) INTO 8 BUCKETS
-          LOCATION '$path'"""
-    } {
+    Layouts.table(s, "labels", dir,
+        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text"),
+        8, Seq("v")) {
       val docs = Tables.documents(s, dir)
       val wm = docs.agg(floor(max($"doc_id") / 2.0).cast("long").as("wm"))
       val corpusSh = bucketedSignatures(s, dir)
@@ -1148,10 +1107,7 @@ object Dedup {
       val corpusPairs = verifyPairsSides(s, corpusSh, "merge",
           corpusSh, "merge", cands)
         .select($"id_a".as("src"), $"id_b".as("dst"))
-      connectedComponents(corpusPairs)
-        .repartition(8, $"v")
-        .write.bucketBy(8, "v").sortBy("v")
-        .option("path", path).mode("overwrite").saveAsTable(tbl)
+      connectedComponents(corpusPairs).repartition(8, $"v")
     }
   }
 

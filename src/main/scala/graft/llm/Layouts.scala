@@ -1,16 +1,34 @@
 package graft.llm
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, count, lit, max, xxhash64}
 
-/** Registration protocol for the derived layouts persisted under /tmp
-  * (bucketed signature/prefix/label tables, the IVF index): written once
-  * per dataset, RE-REGISTERED — not rebuilt — by later sessions, and
-  * invalidated by a dataset fingerprint so a fixture change can never
-  * silently serve stale derived state (the round-5 staleness finding:
-  * layouts were keyed only by the sanitized dir name, so re-registration
-  * trusted whatever bytes sat at the path).
+/** The one owner of every derived layout persisted under /tmp: the LM
+  * counts, IVF/PQ indexes, keep-lists, round-trip copies and the bucketed
+  * catalog tables (signatures, prefixes, labels, graph edges). A caller
+  * names the layout, the dataset dir, the meta (a source fingerprint plus
+  * any version tag) and the build; this object derives the path
+  * (`/tmp/graft_<name>/<key>[/<part>]`) and the table name, and decides
+  * whether to build.
+  *
+  * Commit protocol (the loader's "data first, offsets last" rule): the
+  * `_GRAFT_META` file at the layout root IS the commit marker. It is
+  * deleted before a build and written only after the build returns, so a
+  * present, matching meta means the build for that meta finished — a
+  * killed or failed build leaves no meta and the next call rebuilds, and
+  * a build that writes only subdirectories or side files commits like any
+  * other. A meta that differs (the source was regenerated, or a version
+  * tag moved) rebuilds instead of serving stale bytes: the round-5
+  * staleness finding was that layouts keyed only by the sanitized dir
+  * name trusted whatever sat at the path.
+  *
+  * Bucketed tables also record the schema they were written with, and a
+  * later session re-registers the table from that schema, so no caller
+  * keeps a DDL string that must match what its build writes.
   *
   * At 100 TB the same protocol is the catalog discipline for any
   * materialized derived table: the fingerprint plays the role of a
@@ -45,60 +63,91 @@ private[graft] object Layouts {
     s"${r.getLong(0)}:${r.get(1)}:${r.get(2)}"
   }
 
-  private def metaFile(path: String) = new java.io.File(path, "_GRAFT_META")
+  private def key(dir: String): String = dir.replaceAll("[^a-zA-Z0-9]", "_")
 
-  private def metaMatches(path: String, meta: String): Boolean = {
+  /** Root of layout `name` over dataset `dir`: `/tmp/graft_<name>/<key>`,
+    * or its `part` subdirectory for a layout family sharing one root. */
+  def pathOf(name: String, dir: String, part: String = ""): String = {
+    val root = s"/tmp/graft_$name/${key(dir)}"
+    if (part.isEmpty) root else s"$root/$part"
+  }
+
+  private def metaFile(path: String): Path = Paths.get(path, "_GRAFT_META")
+
+  /** Lines of the committed meta: the meta itself, then (tables only)
+    * the recorded schema. Empty when nothing is committed. */
+  private def recorded(path: String): Seq[String] = {
     val f = metaFile(path)
-    f.exists() && {
-      val src = scala.io.Source.fromFile(f)
-      try src.mkString.trim == meta
-      finally src.close()
-    }
+    if (Files.exists(f)) new String(Files.readAllBytes(f), UTF_8).split("\n").toSeq
+    else Nil
   }
 
-  private def writeMeta(path: String, meta: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
-    java.nio.file.Files.write(metaFile(path).toPath, meta.getBytes("UTF-8"))
+  /** Uncommit, build, then commit `lines` (evaluated after the build). */
+  private def commit(path: String, lines: => Seq[String])(build: => Unit): Unit = {
+    Files.deleteIfExists(metaFile(path))
+    build
+    Files.createDirectories(Paths.get(path))
+    Files.write(metaFile(path), lines.mkString("\n").getBytes(UTF_8))
   }
 
-  /** Register-or-build for a bucketed catalog-table layout. Catalog-warm
-    * sessions serve the table directly (its fingerprint was checked when
-    * it entered the catalog). A complete on-disk layout whose _GRAFT_META
-    * matches re-registers via `registerDdl`; anything else — absent,
-    * incomplete, or fingerprint-stale — rebuilds via `build` (which must
-    * `saveAsTable` with mode overwrite at `path`) and stamps the meta. */
-  def table(s: SparkSession, tbl: String, path: String, meta: => String)(
-      registerDdl: => String)(build: => Unit): DataFrame = {
-    if (!s.catalog.tableExists(tbl)) {
-      val m = meta
-      if (new java.io.File(path, "_SUCCESS").exists() && metaMatches(path, m)) {
-        s.sql(registerDdl)
-      } else {
-        build
-        writeMeta(path, m)
-      }
-    }
-    s.table(tbl)
-  }
-
-  /** Same protocol for plain-parquet layouts (no catalog table — partition
-    * discovery handles re-reads). `successProbe` is the file proving the
-    * last write completed. The per-JVM memo plays the catalog's role so
-    * repeated calls within a session don't re-run the fingerprint agg. */
+  /** Paths whose meta this JVM already checked: the per-JVM memo plays
+    * the catalog's role for plain layouts, so repeated calls within a
+    * session don't re-run the fingerprint agg. */
   private val checkedPaths =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def parquetLayout(path: String, successProbe: String, meta: => String)(
-      build: => Unit): Unit = {
+  /** Build-once for a layout with its own writer (text/csv/binary
+    * formats, several outputs, manifests): `build` runs unless `path`
+    * holds a committed, matching meta. */
+  def persisted(path: String, meta: => String)(build: => Unit): Unit =
     if (!checkedPaths.contains(path)) {
       val m = meta
-      if (!(new java.io.File(successProbe, "_SUCCESS").exists() &&
-            metaMatches(path, m))) {
-        build
-        writeMeta(path, m)
-      }
+      if (recorded(path) != Seq(m)) commit(path, Seq(m))(build)
       checkedPaths.add(path)
     }
+
+  /** Build-once for the common parquet layout: `build`'s rows are written
+    * over `path` (partitioned by `partitionBy`) and read back. */
+  def parquet(s: SparkSession, path: String, meta: => String,
+      partitionBy: String*)(build: => DataFrame): DataFrame = {
+    persisted(path, meta) {
+      build.write.partitionBy(partitionBy: _*).mode("overwrite").parquet(path)
+    }
+    s.read.parquet(path)
+  }
+
+  /** Register-or-build for a bucketed catalog table `graft_<name>[_<part>]_<key>`
+    * at `pathOf(name, dir, part)`, bucketed and sorted by `by`. A
+    * catalog-warm session serves the table directly (its meta was checked
+    * when it entered the catalog). A matching meta re-registers the table
+    * over the files from the recorded schema (recovering partitions with
+    * MSCK REPAIR when `partitionBy` is set); anything else writes `build`'s
+    * rows — callers keep their own pre-write repartition. */
+  def table(s: SparkSession, name: String, dir: String, meta: => String,
+      buckets: Int, by: Seq[String], partitionBy: Seq[String] = Nil,
+      part: String = "")(build: => DataFrame): DataFrame = {
+    val tbl = s"graft_$name${if (part.isEmpty) "" else s"_$part"}_${key(dir)}"
+    val path = pathOf(name, dir, part)
+    if (!s.catalog.tableExists(tbl)) {
+      val m = meta
+      val cols = by.mkString(", ")
+      recorded(path) match {
+        case Seq(`m`, schema) =>
+          val partitioned =
+            if (partitionBy.isEmpty) "" else s"PARTITIONED BY (${partitionBy.mkString(", ")})"
+          s.sql(s"""CREATE TABLE $tbl ($schema) USING PARQUET $partitioned
+                    CLUSTERED BY ($cols) SORTED BY ($cols) INTO $buckets BUCKETS
+                    LOCATION '$path'""")
+          if (partitionBy.nonEmpty) s.sql(s"MSCK REPAIR TABLE $tbl")
+        case _ =>
+          commit(path, Seq(m, s.table(tbl).schema.toDDL)) {
+            build.write.partitionBy(partitionBy: _*)
+              .bucketBy(buckets, by.head, by.tail: _*).sortBy(by.head, by.tail: _*)
+              .option("path", path).mode("overwrite").saveAsTable(tbl)
+          }
+      }
+    }
+    s.table(tbl)
   }
 
   /** Test hook: forget the per-JVM memo so a spec can exercise the

@@ -528,15 +528,11 @@ object Similarity {
     * were built with. Fingerprint-invalidated like every layout. */
   private[graft] def fineCentroids(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val centPath = s"/tmp/graft_ivf/$sfx/centroids"
-    Layouts.parquetLayout(centPath, centPath,
+    Layouts.parquet(s, Layouts.pathOf("ivf", dir, "centroids"),
         Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")) {
       val e = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
       lloydRefine(s, e, seedCentroids(s, e), 2)
-        .write.mode("overwrite").parquet(centPath)
     }
-    s.read.parquet(centPath)
   }
 
   /** The persisted coarse quantizer over the fine codebook — ivf2's
@@ -544,16 +540,12 @@ object Similarity {
     * fineCentroids. See ivf2Pipeline for rationale. */
   private[graft] def coarseCentroids(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_ivf/$sfx/coarse"
-    Layouts.parquetLayout(path, path,
+    Layouts.parquet(s, Layouts.pathOf("ivf", dir, "coarse"),
         Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")) {
       val fineAsRows = fineCentroids(s, dir)
         .select($"cid".as("vec_id"), $"cv".as("embedding"))
       lloydRefine(s, fineAsRows, seedCentroids(s, fineAsRows), 1)
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** The persisted IVF index — codebook + inverted-list assignments,
@@ -570,13 +562,12 @@ object Similarity {
     * in partition order, so a rebuilt codebook is not bit-identical. */
   private[graft] def ivfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val assignPath = s"/tmp/graft_ivf/$sfx/assign"
     // Assignments share the codebook's fingerprint source, so a fixture
     // change invalidates BOTH together — probes can never descend a newer
     // codebook than the one the surviving assignments were built with.
-    Layouts.parquetLayout(assignPath, assignPath,
-        Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")) {
+    val assigned = Layouts.parquet(s, Layouts.pathOf("ivf", dir, "assign"),
+        Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding"),
+        "cid_grp") {
       val e = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
       val codebook = cbOf(s, fineCentroids(s, dir))
       e.crossJoin(codebook)
@@ -584,9 +575,8 @@ object Similarity {
         .drop("cb")
         .withColumn("cid_grp", pmod(hash($"cid"), lit(IndexGroups)))
         .repartition($"cid_grp")
-        .write.mode("overwrite").partitionBy("cid_grp").parquet(assignPath)
     }
-    (fineCentroids(s, dir), s.read.parquet(assignPath))
+    (fineCentroids(s, dir), assigned)
   }
 
   /** ANN top-k over the PERSISTED IVF index — the recurring-query form:
@@ -835,11 +825,8 @@ object Similarity {
     * lookups must descend the same quantizer (the ivfIndex rule). */
   private[graft] def pqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val cbPath = s"/tmp/graft_pq/$sfx/codebook"
-    val codesPath = s"/tmp/graft_pq/$sfx/codes"
     def fp = Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")
-    Layouts.parquetLayout(cbPath, cbPath, fp) {
+    val codebook = Layouts.parquet(s, Layouts.pathOf("pq", dir, "codebook"), fp) {
       val e = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
       var cb = pqSubRows(s, e.filter($"vec_id" < PqK))
         .select($"m", $"vec_id".cast("int").as("ccode"), $"sub".as("cv"))
@@ -851,20 +838,18 @@ object Similarity {
           .agg(transform(array_sort(collect_list(struct($"dim", $"mu"))),
             c => c.getField("mu").cast("float")).as("cv"))
       }
-      cb.write.mode("overwrite").parquet(cbPath)
+      cb
     }
-    Layouts.parquetLayout(codesPath, codesPath, fp) {
+    val codes = Layouts.parquet(s, Layouts.pathOf("pq", dir, "codes"), fp) {
       val e = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
-      val cb = s.read.parquet(cbPath)
-      pqAssign(s, pqSubRows(s, e), cb)
+      pqAssign(s, pqSubRows(s, e), codebook)
         .withColumn("ss", VectorFunctions.dot(s, $"sub", $"sub"))
         .groupBy($"vec_id")
         .agg(transform(array_sort(collect_list(struct($"m", $"ccode"))),
           c => c.getField("ccode")).as("codes"),
           sqrt(sum($"ss")).as("norm"))
-        .write.mode("overwrite").parquet(codesPath)
     }
-    (s.read.parquet(cbPath), s.read.parquet(codesPath))
+    (codebook, codes)
   }
 
   /** ANN top-k by asymmetric distance computation over the PQ index: each
@@ -926,16 +911,13 @@ object Similarity {
     * exists to avoid). Fingerprint-tied like every layout. */
   private[graft] def vecStore(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_pq/$sfx/vecstore"
-    Layouts.parquetLayout(path, path,
-        Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")) {
+    Layouts.parquet(s, Layouts.pathOf("pq", dir, "vecstore"),
+        Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding"),
+        "vec_grp") {
       Tables.embeddings(s, dir).select($"vec_id", $"embedding")
         .withColumn("vec_grp", pmod(hash($"vec_id"), lit(IndexGroups)))
         .repartition($"vec_grp")
-        .write.mode("overwrite").partitionBy("vec_grp").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Exact-cosine refine over an ADC slate (qid, qv, vec_id): fetch the
@@ -1025,13 +1007,12 @@ object Similarity {
     * delta row is a missing rank-1 answer, not a silent recall dip. */
   private[graft] def appendedIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_ivf/$sfx/append"
+    val path = Layouts.pathOf("ivf", dir, "append")
     // ":v2": the delta definition changed in round 10 (post-watermark
     // corpus half → planted twins); the fingerprint covers only the
     // SOURCE, so the meta must version the layout semantics or a prior
     // session's twin-free layout would re-register as fresh.
-    Layouts.parquetLayout(path, path,
+    Layouts.persisted(path,
         Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")
           + ":v2") {
       val e = Tables.embeddings(s, dir).select($"vec_id", $"embedding")
@@ -1146,20 +1127,17 @@ object Similarity {
     * versions independently. */
   private[graft] def compactedIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_ivf/$sfx/compacted"
-    Layouts.parquetLayout(path, path,
+    val path = Layouts.pathOf("ivf", dir, "compacted")
+    Layouts.parquet(s, path,
         Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")
-          + ":v1") {
+          + ":v1", "cid_grp") {
       val tombs = tombstones(s, dir)
       tombs.write.mode("overwrite").parquet(s"$path.tombstones")
       appendedIndex(s, dir)
         .join(broadcast(s.read.parquet(s"$path.tombstones").select($"vec_id")),
           Seq("vec_id"), "left_anti")
         .repartition($"cid_grp")
-        .write.mode("overwrite").partitionBy("cid_grp").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** ANN serving over the COMPACTED index — grades the DELETE end-to-end:
@@ -1201,18 +1179,15 @@ object Similarity {
     * and fingerprinted itself, so a fixture change rebuilds all three. */
   private[graft] def ivfPqIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_pq/$sfx/ivfcodes"
-    Layouts.parquetLayout(path, path,
-        Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")) {
+    Layouts.parquet(s, Layouts.pathOf("pq", dir, "ivfcodes"),
+        Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding"),
+        "cid_grp") {
       val (_, assigned) = ivfIndex(s, dir)
       val (_, codes) = pqIndex(s, dir)
       assigned.select($"vec_id", $"cid", $"cid_grp")
         .join(codes, Seq("vec_id"))
         .repartition($"cid_grp")
-        .write.mode("overwrite").partitionBy("cid_grp").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** ANN top-k via IVF + PQ — candidate pruning AND compressed scoring in
@@ -1457,16 +1432,13 @@ object Similarity {
     * Fingerprinted like every layout; plain partitioned parquet. */
   private def labelIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_labelidx/$sfx"
-    Layouts.parquetLayout(path, path,
-        Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding")) {
+    Layouts.parquet(s, Layouts.pathOf("labelidx", dir),
+        Layouts.fingerprint(Tables.embeddings(s, dir), "vec_id", "embedding"),
+        "label") {
       Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding", $"label")
         .repartition($"label")
-        .write.mode("overwrite").partitionBy("label").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Filtered search over the PERSISTED label-partitioned layout — the

@@ -1071,13 +1071,8 @@ object TextStats {
     * llm_bpe_apply reads the same frozen rules (train once, apply
     * everywhere: the LM/labels/codebook discipline). */
   private[graft] def learnedMerges(s: SparkSession, dir: String): DataFrame = {
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_bpe/$sfx"
-    Layouts.parquetLayout(path, path,
-        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text")) {
-      trainMerges(s, dir).write.mode("overwrite").parquet(path)
-    }
-    s.read.parquet(path)
+    Layouts.parquet(s, Layouts.pathOf("bpe", dir),
+        Layouts.fingerprint(Tables.documents(s, dir), "doc_id", "text"))(trainMerges(s, dir))
   }
 
   /** The unrolled train/apply CTE chain shared by both BPE oracles: w0 is

@@ -421,17 +421,13 @@ object Aggregates {
     * every range-serving query. */
   private[graft] def qsketchCube(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val path = s"/tmp/graft_qsketch/$sfx"
-    graft.llm.Layouts.parquetLayout(path, path,
+    graft.llm.Layouts.parquet(s, graft.llm.Layouts.pathOf("qsketch", dir),
         graft.llm.Layouts.fingerprint(
           Tables.events(s, dir), "event_id", "ts", "value")) {
       qsketchBinned(s, dir)
         .groupBy($"event_type", $"day", $"bid")
         .agg(count(lit(1)).as("c"))
-        .write.mode("overwrite").parquet(path)
     }
-    s.read.parquet(path)
   }
 
   /** Quantile cube SERVING by date range — the recurring-query form of

@@ -69,22 +69,14 @@ object Graph {
     * `src < dst` half of this table — one layout serves the family. */
   private[graft] def adjacency(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val tbl = s"graft_graph_adj_$sfx"
-    val path = s"/tmp/graft_graph_adj/$sfx"
     // ":v2" versions the layout schema (round 9 adds `ddeg`): the
     // fingerprint alone covers the SOURCE data, so a schema change must
-    // bump the meta or a prior session's on-disk layout would re-register
-    // under the new DDL with a column the files don't carry.
-    graft.llm.Layouts.table(s, tbl, path,
+    // bump the meta or a prior session's layout, recorded without the
+    // column, would re-register as current.
+    graft.llm.Layouts.table(s, "graph_adj", dir,
         graft.llm.Layouts.fingerprint(
-          Tables.lineitem(s, dir), "l_orderkey", "l_partkey") + ":v2") {
-      s"""CREATE TABLE $tbl (`src` BIGINT, `dst` BIGINT, `support` BIGINT,
-                             `deg` BIGINT, `wsum` BIGINT, `ddeg` BIGINT)
-          USING PARQUET
-          CLUSTERED BY (src) SORTED BY (src) INTO 8 BUCKETS
-          LOCATION '$path'"""
-    } {
+          Tables.lineitem(s, dir), "l_orderkey", "l_partkey") + ":v2",
+        8, Seq("src")) {
       val lp = Tables.lineitem(s, dir)
         .select($"l_orderkey".as("o"), $"l_partkey".as("p")).distinct()
       val und = lp.as("a").join(lp.as("b"),
@@ -106,8 +98,6 @@ object Graph {
         .join(stats.select($"src".as("dst"), $"deg".as("ddeg")), "dst")
         .select($"src", $"dst", $"support", $"deg", $"wsum", $"ddeg")
         .repartition(8, $"src")
-        .write.bucketBy(8, "src").sortBy("src")
-        .option("path", path).mode("overwrite").saveAsTable(tbl)
     }
   }
 
@@ -683,20 +673,11 @@ object Graph {
         li.crossJoin(broadcast(wmRow)).filter(pred)
       // The persisted base: unthresholded counters for the old wave,
       // bucketed by src (the adjacency layout's convention).
-      val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val tbl = s"graft_graph_base_$sfx"
-      val path = s"/tmp/graft_graph_base/$sfx"
-      val base = graft.llm.Layouts.table(s, tbl, path,
-          graft.llm.Layouts.fingerprint(li, "l_orderkey", "l_partkey")) {
-        s"""CREATE TABLE $tbl (`src` BIGINT, `dst` BIGINT, `support` BIGINT)
-            USING PARQUET
-            CLUSTERED BY (src, dst) SORTED BY (src, dst) INTO 8 BUCKETS
-            LOCATION '$path'"""
-      } {
+      val base = graft.llm.Layouts.table(s, "graph_base", dir,
+          graft.llm.Layouts.fingerprint(li, "l_orderkey", "l_partkey"),
+          8, Seq("src", "dst")) {
         pairCounts(wave($"l_orderkey" <= $"wm"))
           .repartition(8, $"src", $"dst")
-          .write.bucketBy(8, "src", "dst").sortBy("src", "dst")
-          .option("path", path).mode("overwrite").saveAsTable(tbl)
       }
       val delta = pairCounts(wave($"l_orderkey" > $"wm"))
       base.withColumnRenamed("support", "s_base")
@@ -1687,23 +1668,13 @@ object Graph {
   private[graft] def bipartite(s: SparkSession, dir: String, key: String,
       fp0: () => String = null): DataFrame = {
     import s.implicits._
-    val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val tbl = s"graft_hits_b${key}_$sfx"
-    val path = s"/tmp/graft_hits_b$key/$sfx"
     def fp = if (fp0 != null) fp0() else bipartiteFp(s, dir)
-    graft.llm.Layouts.table(s, tbl, path, fp) {
-      s"""CREATE TABLE $tbl (`c` BIGINT, `p` BIGINT)
-          USING PARQUET
-          CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-          LOCATION '$path'"""
-    } {
+    graft.llm.Layouts.table(s, s"hits_b$key", dir, fp, 8, Seq(key)) {
       Tables.orders(s, dir).select($"o_custkey".as("c"), $"o_orderkey")
         .join(Tables.lineitem(s, dir).select($"l_orderkey", $"l_partkey".as("p")),
           $"o_orderkey" === $"l_orderkey")
         .select($"c", $"p").distinct()
         .repartition(8, col(key))
-        .write.bucketBy(8, key).sortBy(key)
-        .option("path", path).mode("overwrite").saveAsTable(tbl)
     }
   }
 

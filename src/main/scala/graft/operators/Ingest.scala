@@ -75,7 +75,7 @@ object Ingest {
     "ingest_partitioned",
     (s, dir) => {
       import s.implicits._
-      val out = s"/tmp/graft_ingest/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val out = graft.llm.Layouts.pathOf("ingest", dir)
       writePartitioned(Tables.events(s, dir), out)
       s.read.parquet(out)
         .groupBy($"event_type", $"d".cast("string").as("d"))
@@ -107,19 +107,18 @@ object Ingest {
     (s, dir) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val out = s"/tmp/graft_retention/$key"
       // Own source layout, own fingerprint memo: rewriting
-      // /tmp/graft_ingest here would couple this query's on-disk state
-      // to ingest_partitioned's and redo its work whenever the
-      // retention fingerprint goes stale (ADVICE r11).
-      val src = s"/tmp/graft_retention_src/$key"
+      // ingest_partitioned's layout here would couple this query's on-disk
+      // state to it and redo its work whenever the retention fingerprint
+      // goes stale (ADVICE r11).
+      val src = graft.llm.Layouts.pathOf("retention_src", dir)
       lazy val fp =
         graft.llm.Layouts.fingerprint(Tables.events(s, dir), "event_id", "ts")
-      graft.llm.Layouts.parquetLayout(src, src, fp) {
+      graft.llm.Layouts.persisted(src, fp) {
         writePartitioned(Tables.events(s, dir), src)
       }
-      graft.llm.Layouts.parquetLayout(out, out, fp) {
+      graft.llm.Layouts.parquet(s, graft.llm.Layouts.pathOf("retention", dir),
+          fp, "d") {
         val srcDf = s.read.parquet(src)
         // Surviving-day list from the PARTITION VALUES (planning-time
         // metadata, not a data scan), then a broadcast SEMI join on the
@@ -129,10 +128,7 @@ object Ingest {
         val survivors = srcDf.select($"d").distinct()
           .crossJoin(broadcast(cut)).filter($"d" >= $"c").select($"d")
         srcDf.join(broadcast(survivors), Seq("d"), "left_semi")
-          .write.partitionBy("d").mode("overwrite").parquet(out)
-      }
-      s.read.parquet(out)
-        .groupBy($"d".cast("string").as("d"))
+      }.groupBy($"d".cast("string").as("d"))
         .agg(count(lit(1)).as("n"))
         .withColumn("days_kept", count(lit(1)).over(Window.rowsBetween(
           Window.unboundedPreceding, Window.unboundedFollowing)))
@@ -170,9 +166,8 @@ object Ingest {
     "ingest_retention_meta",
     (s, dir) => {
       import s.implicits._
-      val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val out = s"/tmp/graft_retention_meta/$key"
-      graft.llm.Layouts.parquetLayout(out, out,
+      val out = graft.llm.Layouts.pathOf("retention_meta", dir)
+      graft.llm.Layouts.persisted(out,
           graft.llm.Layouts.fingerprint(Tables.events(s, dir), "event_id", "ts")) {
         writePartitioned(Tables.events(s, dir), out)
       }
@@ -237,9 +232,8 @@ object Ingest {
     "ingest_vacuum",
     (s, dir) => {
       import s.implicits._
-      val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val out = s"/tmp/graft_vacuum/$key"
-      graft.llm.Layouts.parquetLayout(out, out,
+      val out = graft.llm.Layouts.pathOf("vacuum", dir)
+      graft.llm.Layouts.persisted(out,
           graft.llm.Layouts.fingerprint(Tables.events(s, dir), "event_id", "ts")) {
         writePartitioned(Tables.events(s, dir), out)
       }
@@ -318,8 +312,7 @@ object Ingest {
     * ingest_snapshot_diff. */
   private def timeTravelLayout(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val out = s"/tmp/graft_timetravel/$key"
+    val out = graft.llm.Layouts.pathOf("timetravel", dir)
     val dataPath = s"$out/data"
     def latest(df: DataFrame) =
       df.groupBy($"user_id").agg(
@@ -327,7 +320,7 @@ object Ingest {
         max_by($"value", $"event_id").as("value"))
       .withColumn("grp", pmod($"user_id", lit(8L)))
     val ev = Tables.events(s, dir).select($"user_id", $"event_id", $"value")
-    graft.llm.Layouts.parquetLayout(out, out,
+    graft.llm.Layouts.persisted(out,
         graft.llm.Layouts.fingerprint(Tables.events(s, dir), "event_id", "ts")) {
         val mid = ev.agg(floor(max($"event_id") / 2.0).cast("long").as("mid"))
         val isCorrection = $"user_id" % 50 === 7 && $"event_id" > $"mid"
@@ -617,18 +610,15 @@ object Ingest {
         approx_count_distinct(col(cols.head), 0.02).as(s"andv_${cols.head}"),
         cols.tail.map(c =>
           approx_count_distinct(col(c), 0.02).as(s"andv_$c")): _*)
-      val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val certPath = s"/tmp/graft_analyze_cert/$sfx"
-      graft.llm.Layouts.parquetLayout(certPath, certPath,
+      val exactRow = graft.llm.Layouts.parquet(s,
+          graft.llm.Layouts.pathOf("analyze_cert", dir),
           graft.llm.Layouts.fingerprint(Tables.orders(s, dir), "o_orderkey",
             "o_custkey", "o_orderstatus", "o_orderpriority", "o_totalprice",
             "o_orderdate")) {
         t.agg(
-            countDistinct(col(cols.head)).as(s"ndv_${cols.head}"),
-            cols.tail.map(c => countDistinct(col(c)).as(s"ndv_$c")): _*)
-          .write.mode("overwrite").parquet(certPath)
+          countDistinct(col(cols.head)).as(s"ndv_${cols.head}"),
+          cols.tail.map(c => countDistinct(col(c)).as(s"ndv_$c")): _*)
       }
-      val exactRow = s.read.parquet(certPath)
       val stacked = cols.map(c =>
         s"'$c', ndv_$c, " +
           s"(abs(CAST(andv_$c AS DOUBLE) / CAST(ndv_$c AS DOUBLE) - 1.0)" +
@@ -685,20 +675,16 @@ object Ingest {
     * and join_dpp), written once per sf-dir behind the Layouts fingerprint
     * protocol: a regenerated events fixture invalidates the layout instead
     * of silently serving stale partitioned bytes while the oracle reads the
-    * live parquet (the round-5 staleness class the bare _SUCCESS probe
-    * reintroduced here). */
-  private def bydayLayout(s: SparkSession, dir: String): String = {
+    * live parquet. */
+  private def bydayLayout(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val out = s"/tmp/graft_ingest_byday/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-    graft.llm.Layouts.parquetLayout(out, out,
+    graft.llm.Layouts.parquet(s, graft.llm.Layouts.pathOf("ingest_byday", dir),
       graft.llm.Layouts.fingerprint(
-        Tables.events(s, dir), "event_id", "ts", "event_type", "value")) {
+        Tables.events(s, dir), "event_id", "ts", "event_type", "value"), "d") {
       Tables.events(s, dir)
         .withColumn("d", date_format($"ts", "yyyy-MM-dd"))
         .repartition($"d")
-        .write.partitionBy("d").mode("overwrite").parquet(out)
     }
-    out
   }
 
   /** Partition-pruned scan: a day-partitioned layout is written once per
@@ -711,8 +697,7 @@ object Ingest {
     "scan_partition_prune",
     (s, dir) => {
       import s.implicits._
-      val out = bydayLayout(s, dir)
-      s.read.parquet(out)
+      bydayLayout(s, dir)
         .filter($"d" >= "2024-01-08" && $"d" <= "2024-01-14")
         .groupBy($"d".cast("string").as("d"))
         .agg(count(lit(1)).as("n"), round(sum($"value"), 4).as("sum_value"))
@@ -736,36 +721,17 @@ object Ingest {
     "join_bucketed",
     (s, dir) => {
       import s.implicits._
-      val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val base = s"/tmp/graft_bucketed/$sfx"
-      def persistBucketed(df: DataFrame, name: String, key: String): Unit = {
-        val tbl = s"graft_${name}_$sfx"
-        if (!s.catalog.tableExists(tbl)) {
-          val path = s"$base/$name"
-          if (new java.io.File(path, "_SUCCESS").exists()) {
-            // layout already on disk from an earlier session — the
-            // in-memory catalog forgot it, so re-register the external
-            // bucketed table over the existing files (bucket ids are
-            // encoded in the filenames) instead of rewriting.
-            val cols = df.schema.fields
-              .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
-            s.sql(s"""CREATE TABLE $tbl ($cols) USING PARQUET
-                      CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-                      LOCATION '$path'""")
-          } else {
-            df.write.bucketBy(8, key).sortBy(key)
-              .option("path", path).mode("overwrite").saveAsTable(tbl)
-          }
-        }
-      }
-      persistBucketed(Tables.lineitem(s, dir)
-        .select($"l_orderkey", $"l_extendedprice", $"l_discount"),
-        "lineitem", "l_orderkey")
-      persistBucketed(Tables.orders(s, dir)
-        .select($"o_orderkey", $"o_orderpriority"),
-        "orders", "o_orderkey")
-      s.table(s"graft_lineitem_$sfx").hint("merge")
-        .join(s.table(s"graft_orders_$sfx"),
+      // Each side is fingerprinted over exactly the columns it persists.
+      def bucketed(df: DataFrame, part: String, key: String): DataFrame =
+        graft.llm.Layouts.table(s, "bucketed", dir,
+          graft.llm.Layouts.fingerprint(df, key, df.columns.filter(_ != key): _*),
+          8, Seq(key), part = part)(df)
+      bucketed(Tables.lineitem(s, dir)
+          .select($"l_orderkey", $"l_extendedprice", $"l_discount"),
+          "lineitem", "l_orderkey").hint("merge")
+        .join(bucketed(Tables.orders(s, dir)
+            .select($"o_orderkey", $"o_orderpriority"),
+            "orders", "o_orderkey"),
           $"l_orderkey" === $"o_orderkey")
         .groupBy($"o_orderpriority")
         .agg(count(lit(1)).as("n_lines"),
@@ -840,14 +806,10 @@ object Ingest {
     s"source_$fmt",
     (s, dir) => {
       import s.implicits._
-      val out = s"/tmp/graft_src_$fmt/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val out = graft.llm.Layouts.pathOf(s"src_$fmt", dir)
       val cols = Tables.events(s, dir)
         .select($"event_id", $"event_type", $"value")
-      // Fingerprinted, not _SUCCESS-probed: a fixture regenerated in place
-      // would otherwise keep serving the stale round-trip bytes while the
-      // oracle reads the live parquet (round-8 advice on source_binary —
-      // same hole here).
-      graft.llm.Layouts.parquetLayout(out, out,
+      graft.llm.Layouts.persisted(out,
           graft.llm.Layouts.fingerprint(cols, "event_id", "event_type", "value")) {
         cols.write.format(fmt).option("header", "true").mode("overwrite").save(out)
       }
@@ -885,9 +847,9 @@ object Ingest {
     "source_text",
     (s, dir) => {
       import s.implicits._
-      val out = s"/tmp/graft_src_text/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
+      val out = graft.llm.Layouts.pathOf("src_text", dir)
       val cols = Tables.documents(s, dir).select($"doc_id", $"text")
-      graft.llm.Layouts.parquetLayout(out, out,
+      graft.llm.Layouts.persisted(out,
           graft.llm.Layouts.fingerprint(cols, "doc_id", "text")) {
         cols.select(concat($"doc_id".cast("string"), lit("\t"), $"text"))
           .write.format("text").mode("overwrite").save(out)
@@ -926,11 +888,8 @@ object Ingest {
     "source_binary",
     (s, dir) => {
       import s.implicits._
-      val out = s"/tmp/graft_blobs/${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
-      // Layouts fingerprint protocol, not a bare _SUCCESS probe: if the
-      // documents fixture is regenerated in place, stale blob bytes would
-      // diverge from the live-parquet DuckDB oracle (round-8 advice).
-      graft.llm.Layouts.parquetLayout(out, out,
+      val out = graft.llm.Layouts.pathOf("blobs", dir)
+      graft.llm.Layouts.persisted(out,
           graft.llm.Layouts.fingerprint(
             Tables.documents(s, dir), "doc_id", "text")) {
         Tables.documents(s, dir)
@@ -964,46 +923,26 @@ object Ingest {
     "ingest_partition_bucket",
     (s, dir) => {
       import s.implicits._
-      val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val tbl = s"graft_events_pb_$sfx"
-      val path = s"/tmp/graft_pb/$sfx"
-      if (!s.catalog.tableExists(tbl)) {
-        // _SUCCESS, not bare existence: a partially-written layout from a
-        // killed earlier run must be rewritten, not silently served.
-        if (new java.io.File(path, "_SUCCESS").exists()) {
-          // layout on disk from an earlier session — re-register and
-          // recover the partition directories into the catalog.
-          s.sql(s"""CREATE TABLE $tbl
-                    (`event_id` BIGINT, `ts` TIMESTAMP, `user_id` BIGINT,
-                     `event_type` STRING, `value` DOUBLE, `props` STRING,
-                     `d` STRING)
-                    USING PARQUET PARTITIONED BY (d)
-                    CLUSTERED BY (user_id) SORTED BY (user_id) INTO 4 BUCKETS
-                    LOCATION '$path'""")
-          s.sql(s"MSCK REPAIR TABLE $tbl")
-        } else {
-          Tables.events(s, dir)
-            .withColumn("d", date_format($"ts", "yyyy-MM-dd"))
-            // Pre-shuffle on (day, bucket-id) so each (d, bucket) pair is
-            // held by exactly one write task: without this, EVERY input
-            // task emits its own file per (day x bucket) it touches, and
-            // cold file count scales with cluster parallelism (thousands
-            // of tasks -> small-files explosion at the exact layer meant
-            // to be the scale-ready layout). pmod(hash(user_id), 4) is
-            // Spark's own bucket-id function (Murmur3 then pmod), so the
-            // co-location is exact and the layout is days x 4 files at
-            // any parallelism. IngestSpec pins the file count.
-            .repartition($"d", pmod(hash($"user_id"), lit(4)))
-            // 4 buckets: the layout writes days x buckets files, and the
-            // local-FS per-file writer cost (see BASELINE.md) is the whole
-            // cold price — size bucket count to the data, not habit. The
-            // shuffle-free aggregation property is bucket-count-independent.
-            .write.partitionBy("d").bucketBy(4, "user_id").sortBy("user_id")
-            .option("path", path).mode("overwrite").saveAsTable(tbl)
-        }
-      }
-      s.table(tbl)
-        .filter($"d" >= "2024-01-08" && $"d" <= "2024-01-14")
+      lazy val ev = Tables.events(s, dir) // read only on the cold path
+      // 4 buckets: the layout writes days x buckets files, and the
+      // local-FS per-file writer cost (see BASELINE.md) is the whole
+      // cold price — size bucket count to the data, not habit. The
+      // shuffle-free aggregation property is bucket-count-independent.
+      graft.llm.Layouts.table(s, "pb", dir,
+          graft.llm.Layouts.fingerprint(ev, "event_id", ev.columns.filter(_ != "event_id"): _*),
+          4, Seq("user_id"), partitionBy = Seq("d")) {
+        ev.withColumn("d", date_format($"ts", "yyyy-MM-dd"))
+          // Pre-shuffle on (day, bucket-id) so each (d, bucket) pair is
+          // held by exactly one write task: without this, EVERY input
+          // task emits its own file per (day x bucket) it touches, and
+          // cold file count scales with cluster parallelism (thousands
+          // of tasks -> small-files explosion at the exact layer meant
+          // to be the scale-ready layout). pmod(hash(user_id), 4) is
+          // Spark's own bucket-id function (Murmur3 then pmod), so the
+          // co-location is exact and the layout is days x 4 files at
+          // any parallelism. IngestSpec pins the file count.
+          .repartition($"d", pmod(hash($"user_id"), lit(4)))
+      }.filter($"d" >= "2024-01-08" && $"d" <= "2024-01-14")
         .groupBy($"user_id")
         .agg(count(lit(1)).as("n"), round(sum($"value"), 4).as("sum_value"))
         .orderBy($"user_id")
@@ -1036,24 +975,19 @@ object Ingest {
     "ingest_compact",
     (s, dir) => {
       import s.implicits._
-      val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val frag = s"/tmp/graft_frag/$sfx"
-      val compacted = s"/tmp/graft_compacted/$sfx"
+      val frag = graft.llm.Layouts.pathOf("frag", dir)
       lazy val meta = // forced only on the cold build path (r16)
         graft.llm.Layouts.fingerprint(Tables.events(s, dir), "event_id", "ts")
-      graft.llm.Layouts.parquetLayout(frag, frag, meta) {
+      graft.llm.Layouts.persisted(frag, meta) {
         Tables.events(s, dir)
           .withColumn("d", date_format($"ts", "yyyy-MM-dd"))
           .repartition(8)
           .write.partitionBy("d").mode("overwrite").parquet(frag)
       }
-      graft.llm.Layouts.parquetLayout(compacted, compacted, meta) {
-        s.read.parquet(frag)
-          .repartition($"d")
-          .write.partitionBy("d").mode("overwrite").parquet(compacted)
-      }
-      s.read.parquet(compacted)
-        .select($"d".cast("string").as("d"), col("_metadata.file_path").as("f"))
+      graft.llm.Layouts.parquet(s, graft.llm.Layouts.pathOf("compacted", dir),
+          meta, "d") {
+        s.read.parquet(frag).repartition($"d")
+      }.select($"d".cast("string").as("d"), col("_metadata.file_path").as("f"))
         .groupBy($"d")
         .agg(count(lit(1)).as("n_rows"), countDistinct($"f").as("n_files"))
         .orderBy($"d")
@@ -1212,11 +1146,9 @@ object Ingest {
     "ingest_zorder",
     (s, dir) => {
       import s.implicits._
-      val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val path = s"/tmp/graft_zorder/$sfx"
       lazy val meta = // forced only on the cold build path (r16)
         graft.llm.Layouts.fingerprint(Tables.events(s, dir), "event_id", "ts")
-      graft.llm.Layouts.parquetLayout(path, path, meta) {
+      graft.llm.Layouts.parquet(s, graft.llm.Layouts.pathOf("zorder", dir), meta) {
         val ev = Tables.events(s, dir)
           .select($"user_id", $"value",
             datediff($"ts", lit("1970-01-01")).cast("long").as("d"))
@@ -1231,10 +1163,7 @@ object Ingest {
           .select($"user_id", $"d", $"value", $"z")
           .repartitionByRange(16, $"z")
           .sortWithinPartitions($"z")
-          .write.mode("overwrite").parquet(path)
-      }
-      s.read.parquet(path)
-        .groupBy(shiftright($"z", 6).as("zb"))
+      }.groupBy(shiftright($"z", 6).as("zb"))
         .agg(count(lit(1)).as("n"),
           min($"user_id").as("min_u"), max($"user_id").as("max_u"),
           min($"d").as("min_d"), max($"d").as("max_d"))
@@ -1274,11 +1203,10 @@ object Ingest {
     "ingest_schema_evolution",
     (s, dir) => {
       import s.implicits._
-      val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val root = s"/tmp/graft_evolve/$sfx"
+      val root = graft.llm.Layouts.pathOf("evolve", dir)
       lazy val meta = // forced only on the cold build path (r16)
         graft.llm.Layouts.fingerprint(Tables.events(s, dir), "event_id", "ts")
-      graft.llm.Layouts.parquetLayout(root, root, meta) {
+      graft.llm.Layouts.persisted(root, meta) {
         val ev = Tables.events(s, dir)
         // v1 producer: no event_type column yet.
         ev.filter(pmod($"event_id", lit(2L)) === 0)
@@ -1321,8 +1249,7 @@ object Ingest {
     "join_dpp",
     (s, dir) => {
       import s.implicits._
-      val out = bydayLayout(s, dir)
-      val fact = s.read.parquet(out)
+      val fact = bydayLayout(s, dir)
       val mondays = fact.select($"d").distinct()
         .filter(dayofweek(to_date($"d")) === 2)
       fact.join(broadcast(mondays), "d")
@@ -1378,8 +1305,7 @@ object Ingest {
     (s, dir) => {
       import s.implicits._
       val out = timeTravelLayout(s, dir)
-      val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
-      val cloneDir = s"/tmp/graft_clone/$key"
+      val cloneDir = graft.llm.Layouts.pathOf("clone", dir)
       val srcHead = readManifestLines(s, s"$out/manifest-v2")
       writeManifestLines(s, s"$cloneDir/manifest-v1", srcHead)
       // Match the path COMPONENT exactly — a substring test would also

@@ -87,7 +87,7 @@ class IngestSpec extends AnyFunSuite {
     // Force the COLD write path: drop any registered table / on-disk layout
     // so the file-count assertion sees this build's writer, not a stale one.
     val sfx = TestSpark.Sf.replaceAll("[^a-zA-Z0-9]", "_")
-    spark.sql(s"DROP TABLE IF EXISTS graft_events_pb_$sfx")
+    spark.sql(s"DROP TABLE IF EXISTS graft_pb_$sfx")
     val root = new java.io.File(s"/tmp/graft_pb/$sfx")
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
@@ -515,6 +515,75 @@ class IngestSpec extends AnyFunSuite {
     assert(parsed.keySet === truth.keySet, "every doc round-trips as one line")
     truth.foreach { case (id, text) =>
       assert(parsed(id) === text, s"doc $id: text differs after the line round-trip")
+    }
+  }
+
+  /** Runs `body` over a scratch fixture dir holding copies of `tables`,
+    * then drops and deletes every layout keyed to that dir. */
+  private def withFixture(tables: String*)(body: String => Unit): Unit = {
+    val dir = Files.createTempDirectory("layout_fixture").toString
+    tables.foreach(t => Files.copy(java.nio.file.Paths.get(s"${TestSpark.Sf}/$t.parquet"),
+      java.nio.file.Paths.get(s"$dir/$t.parquet")))
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(): Unit
+    }
+    try body(dir)
+    finally {
+      dropLayoutTables(dir)
+      val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
+      new java.io.File("/tmp").listFiles().filter(_.getName.startsWith("graft_"))
+        .foreach(t => rm(new java.io.File(t, key)))
+      rm(new java.io.File(dir))
+    }
+  }
+
+  /** What a new session sees: no catalog table for the fixture's layouts. */
+  private def dropLayoutTables(dir: String): Unit = {
+    val key = dir.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase
+    spark.catalog.listTables().collect().map(_.name)
+      .filter(_.toLowerCase.endsWith(key))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("join_bucketed rebuilds when a fixture is regenerated in place") {
+    withFixture("lineitem", "orders") { dir =>
+      operators.Ingest.joinBucketed.run(spark, dir).collect()
+      dropLayoutTables(dir)
+      sources.Tables.orders(spark, TestSpark.Sf)
+        .withColumn("o_orderpriority", when($"o_orderkey" % 2 === 0,
+          concat($"o_orderpriority", lit("*"))).otherwise($"o_orderpriority"))
+        .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      val got = operators.Ingest.joinBucketed.run(spark, dir).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      val want = sources.Tables.lineitem(spark, dir)
+        .join(sources.Tables.orders(spark, dir), $"l_orderkey" === $"o_orderkey")
+        .groupBy($"o_orderpriority")
+        .agg(count(lit(1)), sum($"l_extendedprice" * (lit(1.0) - $"l_discount")))
+        .orderBy($"o_orderpriority").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      assert(got.map(r => (r._1, r._2)).toSeq === want.map(r => (r._1, r._2)).toSeq)
+      got.zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._3) < 0.01, s"$g vs $w") }
+    }
+  }
+
+  test("ingest_partition_bucket rebuilds when a fixture is regenerated in place") {
+    withFixture("events") { dir =>
+      operators.Ingest.partitionBucket.run(spark, dir).collect()
+      dropLayoutTables(dir)
+      sources.Tables.events(spark, TestSpark.Sf)
+        .withColumn("value", $"value" * 2 + 1)
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val got = operators.Ingest.partitionBucket.run(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      val want = sources.Tables.events(spark, dir)
+        .filter(date_format($"ts", "yyyy-MM-dd").between("2024-01-08", "2024-01-14"))
+        .groupBy($"user_id").agg(count(lit(1)), sum($"value"))
+        .orderBy($"user_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      assert(want.nonEmpty)
+      assert(got.map(r => (r._1, r._2)).toSeq === want.map(r => (r._1, r._2)).toSeq)
+      got.zip(want).foreach { case (g, w) => assert(math.abs(g._3 - w._3) < 1e-3, s"$g vs $w") }
     }
   }
 }
