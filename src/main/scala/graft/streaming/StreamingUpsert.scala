@@ -71,13 +71,11 @@ object StreamingUpsert {
     * consume everything new (checkpointed), merge per micro-batch, stop. */
   def runOnce(spark: SparkSession, updates: DataFrame, stateDir: String,
               checkpointDir: String): Unit = {
-    val q = updates.writeStream
+    val q = Checkpoints.start(spark, updates.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         mergeBatch(spark, batch, stateDir)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .trigger(Trigger.AvailableNow()), checkpointDir)
     q.awaitTermination()
   }
 

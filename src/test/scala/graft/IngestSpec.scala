@@ -53,6 +53,25 @@ class IngestSpec extends AnyFunSuite {
     assert(spark.read.parquet(out).select("event_type").distinct().count() === 1)
   }
 
+  test("writePartitioned settings are per-write: the session conf is untouched and the committer reaches the job") {
+    val keys = Seq("spark.sql.sources.partitionOverwriteMode",
+      "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version")
+    def sessionConf = keys.map(spark.conf.getOption)
+    val before = sessionConf
+    val out = Files.createTempDirectory("graft_dyn_conf").toString + "/out"
+    val src = sources.Tables.events(spark, TestSpark.Sf)
+    operators.Ingest.writePartitioned(src, out)
+    operators.Ingest.writePartitioned(
+      src.filter($"event_type" === "click"), out, dynamicOverwrite = true)
+    assert(sessionConf === before, "writePartitioned must not change the shared session")
+    // a later full load of the same partial input still truncates siblings
+    operators.Ingest.writePartitioned(src.filter($"event_type" === "click"), out)
+    assert(spark.read.parquet(out).select("event_type").distinct().count() === 1)
+    val jobConf = spark.sessionState.newHadoopConfWithOptions(
+      operators.Ingest.overwriteOptions(dynamicOverwrite = false))
+    assert(jobConf.get("mapreduce.fileoutputcommitter.algorithm.version") === "1")
+  }
+
   test("bucketed join plans with zero exchanges below the sort-merge join") {
     val df = operators.Ingest.joinBucketed.run(spark, TestSpark.Sf)
     val plan = df.queryExecution.executedPlan.toString
