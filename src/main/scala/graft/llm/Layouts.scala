@@ -7,6 +7,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, count, lit, max, xxhash64}
 
+import graft.streaming.LocalWrites
+
 /** The one owner of every derived layout persisted under /tmp: the LM
   * counts, IVF/PQ indexes, keep-lists, round-trip copies and the bucketed
   * catalog tables (signatures, prefixes, labels, graph edges). A caller
@@ -111,7 +113,8 @@ private[graft] object Layouts {
   def parquet(s: SparkSession, path: String, meta: => String,
       partitionBy: String*)(build: => DataFrame): DataFrame = {
     persisted(path, meta) {
-      build.write.partitionBy(partitionBy: _*).mode("overwrite").parquet(path)
+      build.write.options(LocalWrites.options(s, path))
+        .partitionBy(partitionBy: _*).mode("overwrite").parquet(path)
     }
     s.read.parquet(path)
   }
@@ -141,9 +144,14 @@ private[graft] object Layouts {
           if (partitionBy.nonEmpty) s.sql(s"MSCK REPAIR TABLE $tbl")
         case _ =>
           commit(path, Seq(m, s.table(tbl).schema.toDDL)) {
-            build.write.partitionBy(partitionBy: _*)
-              .bucketBy(buckets, by.head, by.tail: _*).sortBy(by.head, by.tail: _*)
-              .option("path", path).mode("overwrite").saveAsTable(tbl)
+            val rows = build
+            // Scoped, not write options: saveAsTable keeps its options as
+            // table properties, and the catalog must not record these.
+            LocalWrites.scoped(s, path) {
+              rows.write.partitionBy(partitionBy: _*)
+                .bucketBy(buckets, by.head, by.tail: _*).sortBy(by.head, by.tail: _*)
+                .option("path", path).mode("overwrite").saveAsTable(tbl)
+            }
           }
       }
     }

@@ -46,7 +46,8 @@ final class SchemeCheckpointFileManager(path: Path, conf: Configuration)
     extends CheckpointFileManager {
 
   private[graft] val delegate: CheckpointFileManager =
-    if (Checkpoints.isLocal(path, conf)) new FileSystemBasedCheckpointFileManager(path, conf)
+    if (Checkpoints.isLocal(path, conf))
+      new FileSystemBasedCheckpointFileManager(path, LocalWrites.configured(conf, path))
     else {
       // Spark's own choice, as if no manager class were configured.
       val default = new Configuration(conf)

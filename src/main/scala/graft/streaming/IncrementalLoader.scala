@@ -1,5 +1,8 @@
 package graft.streaming
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -32,15 +35,19 @@ import org.apache.spark.sql.types.StructType
   * while the source still lists and commits the backlog offsets and the
   * sink's metadata log stays contiguous from batch 0.
   *
-  * Loader round cost (one new 1500-event segment, `local[4]` on 4 vCPUs,
-  * medians of 40 warm rounds): query start and stop ~75 ms;
-  * `latestOffset`, `walCommit` and `commitOffsets` 7–10 ms each (32–36 ms
-  * under Spark's default checkpoint manager, whose local rename forks
-  * `readlink` — see `Checkpoints`); `addBatch` 290–330 ms, ~0.1–0.2 s of
-  * it the write job's one task. About 20 forked `chmod`s per round
-  * remain: every local file create (four checkpoint log files, the sink's
-  * data files, and a `.crc` beside each) sets permissions through a shell
-  * when Hadoop's native library is absent.
+  * Loader round cost (one new 1500-event segment over 5 event types and
+  * 2 days, ~10 sink files; `local[4]` on 4 vCPUs; medians of 40 warm
+  * rounds from the queries' progress reports): query start and stop
+  * ~90 ms; `latestOffset`, `walCommit` and `commitOffsets` 1–2 ms each;
+  * `getBatch` 8 ms, `queryPlanning` 13 ms; `addBatch` ~275 ms. A round
+  * forks no process per file: the checkpoint logs rename without a
+  * `readlink` (`Checkpoints`), and the sink, the checkpoint logs and
+  * `_spark_metadata` create files without a `chmod` (`LocalWrites`;
+  * with forks the same round measured 0.56 s, `addBatch` ~420 ms and
+  * 10 ms for each log phase). What still forks is Spark's own: one
+  * `rm -rf` per stopped query, in which `ArtifactManager` clears the
+  * artifact directory of the query's session clone once that clone is
+  * collected, on the JVM's cleaner thread, off the round's path.
   */
 object IncrementalLoader {
 
@@ -58,11 +65,18 @@ object IncrementalLoader {
     * the entire backlog the reset=Latest policy exists to skip. Only
     * numeric names are batch files; `.<id>.<uuid>.tmp` leftovers of an
     * interrupted commit and `.crc` side files are not. The log keeps only
-    * the latest batches, so the id, not the file count, is the measure. */
-  private def lastCommitted(ckpt: String): Long =
-    Option(new java.io.File(ckpt, "commits").list()).toSeq.flatten
-      .filter(n => n.nonEmpty && n.forall(_.isDigit))
+    * the latest batches, so the id, not the file count, is the measure.
+    * Lists through the Hadoop file system of the checkpoint's scheme, the
+    * one its logs are written through. */
+  private def lastCommitted(spark: SparkSession, ckpt: String): Long = {
+    val commits = new Path(ckpt, "commits")
+    val fs = commits.getFileSystem(spark.sessionState.newHadoopConf())
+    val names =
+      try fs.listStatus(commits).toSeq.map(_.getPath.getName)
+      catch { case _: FileNotFoundException => Nil }
+    names.filter(n => n.nonEmpty && n.forall(_.isDigit))
       .map(_.toLong).maxOption.getOrElse(-1L)
+  }
 
   /** One incremental run: consume all files not yet committed to the
     * checkpoint, write them to the partitioned sink, commit, stop.
@@ -76,16 +90,16 @@ object IncrementalLoader {
       maxFilesPerTrigger: Int = 4,
       codec: String = "snappy",
       reset: OffsetReset = OffsetReset.Earliest): Long = {
-    if (reset == OffsetReset.Latest && lastCommitted(checkpointDir) < 0)
+    if (reset == OffsetReset.Latest && lastCommitted(spark, checkpointDir) < 0)
       // Seek-to-end bootstrap: same pipeline, constant-false filter — the
       // source commits the backlog offsets, the sink lands zero rows, and
       // no data bytes are read (Filter(false) prunes to an empty relation).
       runPipeline(spark, srcDir, schema, outDir, checkpointDir,
         Int.MaxValue, codec, dropAll = true)
-    val before = lastCommitted(checkpointDir)
+    val before = lastCommitted(spark, checkpointDir)
     runPipeline(spark, srcDir, schema, outDir, checkpointDir,
       maxFilesPerTrigger, codec, dropAll = false)
-    lastCommitted(checkpointDir) - before
+    lastCommitted(spark, checkpointDir) - before
   }
 
   private def runPipeline(
@@ -103,12 +117,16 @@ object IncrementalLoader {
       .parquet(srcDir)
     val staged = if (dropAll) in.filter(lit(false)) else in
     val bucketed = staged.withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
-    val q = Checkpoints.start(spark, bucketed.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("compression", codec)
-      .partitionBy("event_type", "d")
-      .trigger(Trigger.AvailableNow()), checkpointDir)
+    // The file sink takes its Hadoop configuration from the session in
+    // `start()`, so its local writes go through LocalWrites for the start.
+    val q = LocalWrites.scoped(spark, outDir) {
+      Checkpoints.start(spark, bucketed.writeStream
+        .format("parquet")
+        .option("path", outDir)
+        .option("compression", codec)
+        .partitionBy("event_type", "d")
+        .trigger(Trigger.AvailableNow()), checkpointDir)
+    }
     q.awaitTermination()
   }
 

@@ -84,6 +84,32 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(IncrementalLoader.loaded(spark, out).count() === 50)
   }
 
+  test("runOnce reads committed batches through the checkpoint's own file system") {
+    val base = Files.createTempDirectory("graft_ckm_view").toString
+    val (src, out) = (s"$base/src", s"$base/out")
+    val link = s"/view_${java.util.UUID.randomUUID.toString.take(8)}"
+    // viewfs mounted over a local directory: a non-file checkpoint that
+    // needs no cluster.
+    val keys = Map(s"fs.viewfs.mounttable.default.link.$link" -> s"file://$base",
+      "fs.viewfs.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val ckpt = s"viewfs://$link/ckpt"
+      mkBatch(0 until 30, src)
+      val schema = spark.read.parquet(src).schema
+      val latest = IncrementalLoader.OffsetReset.Latest
+      assert(IncrementalLoader.runOnce(spark, src, schema, out, ckpt, reset = latest) === 0)
+      assert(Files.exists(Paths.get(base, "ckpt", "commits", "0")), "the backlog is committed")
+      mkBatch(30 until 40, src)
+      // A committed checkpoint: Latest no longer skips what arrives.
+      assert(IncrementalLoader.runOnce(spark, src, schema, out, ckpt, reset = latest) === 1)
+      assert(IncrementalLoader.loaded(spark, out).count() === 10)
+      (4 until 7).foreach(k => mkBatch(k * 10 until (k + 1) * 10, src))
+      assert(IncrementalLoader.runOnce(spark, src, schema, out, ckpt, maxFilesPerTrigger = 1) === 3)
+      assert(IncrementalLoader.loaded(spark, out).count() === 40)
+    } finally keys.keys.foreach(spark.conf.unset)
+  }
+
   test("stray temp files of an interrupted checkpoint rename do not break exactly-once") {
     val base = Files.createTempDirectory("graft_ckm_crash").toString
     val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
