@@ -1870,8 +1870,11 @@ object Similarity {
   private[graft] def pcaCovFrame(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val D = PcaD
+    // A zero-length row carries no coordinates: LongVecSum folds it as
+    // identity and the join form's posexplode drops it, so `n` must not
+    // count it either (it would bias the mean and the covariance).
     val e = Tables.embeddings(s, dir)
-      .filter($"embedding".isNotNull).select($"embedding")
+      .filter($"embedding".isNotNull && size($"embedding") > 0).select($"embedding")
     // One scan, zero joins: each row contributes its quantized outer
     // product + mean terms as ONE array<long> (PcaQuantGram), folded
     // map-side by LongVecSum — sums of exact BIGINTs are association-free,

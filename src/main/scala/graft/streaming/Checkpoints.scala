@@ -12,17 +12,48 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
   * checkpoints — the source file log, offsets, commits, the file sink's
   * `_spark_metadata` and the state stores — for this query and every later
   * one. The choice follows the checkpoint path's scheme, so there is no
-  * option to set; a manager class the session already names is kept. */
+  * option to set; a manager class the session already names is kept.
+  *
+  * `start` also starts the query without per-session artifact isolation.
+  * A query runs on a clone of the session, and with isolation on each
+  * clone gets an artifact state of its own, so its tasks run in a fresh
+  * class loader. Spark's codegen cache is keyed by class loader: every
+  * loader round compiled the same generated classes again (7 a round,
+  * 50–65 ms; SCALE.md § Streaming). Without isolation the tasks run in
+  * the executor's default class loader and the cache hits from the second
+  * round on. The program's queries add no artifacts to a session — the
+  * loader uses built-in expressions, the upsert's batch function is the
+  * program's own class — so they need none of it. The key is set only
+  * for the `start()` call, whose session clone copies the conf; a value
+  * the session sets itself is kept. */
 object Checkpoints {
 
   /** Spark's session key for the checkpoint file manager class. */
   val ManagerClassKey = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** Spark's session key for per-session artifact isolation. */
+  private[graft] val IsolationKey = "spark.sql.artifact.isolation.enabled"
+
   def start[T](spark: SparkSession, writer: DataStreamWriter[T],
                checkpointDir: String): StreamingQuery = {
     if (spark.conf.getOption(ManagerClassKey).isEmpty)
       spark.conf.set(ManagerClassKey, classOf[SchemeCheckpointFileManager].getName)
-    writer.option("checkpointLocation", checkpointDir).start()
+    val shared =
+      if (spark.sessionState.conf.contains(IsolationKey)) Map.empty[String, String]
+      else Map(IsolationKey -> "false")
+    scoped(spark, shared)(writer.option("checkpointLocation", checkpointDir).start())
+  }
+
+  /** Runs `body` with `keys` set on the session, then puts back exactly
+    * what was there: a key the session did not set is unset again, also
+    * when `body` throws. For settings that a query or a writer copies
+    * from the session when it is created. */
+  private[graft] def scoped[A](spark: SparkSession, keys: Map[String, String])(body: => A): A = {
+    val conf = spark.sessionState.conf
+    val saved = keys.keys.map(k => k -> Option.when(conf.contains(k))(conf.getConfString(k)))
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 
   /** True when `path` resolves to the local file system: its own scheme,

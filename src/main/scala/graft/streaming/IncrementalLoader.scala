@@ -36,18 +36,24 @@ import org.apache.spark.sql.types.StructType
   * sink's metadata log stays contiguous from batch 0.
   *
   * Loader round cost (one new 1500-event segment over 5 event types and
-  * 2 days, ~10 sink files; `local[4]` on 4 vCPUs; medians of 40 warm
-  * rounds from the queries' progress reports): query start and stop
-  * ~90 ms; `latestOffset`, `walCommit` and `commitOffsets` 1–2 ms each;
-  * `getBatch` 8 ms, `queryPlanning` 13 ms; `addBatch` ~275 ms. A round
-  * forks no process per file: the checkpoint logs rename without a
-  * `readlink` (`Checkpoints`), and the sink, the checkpoint logs and
-  * `_spark_metadata` create files without a `chmod` (`LocalWrites`;
-  * with forks the same round measured 0.56 s, `addBatch` ~420 ms and
-  * 10 ms for each log phase). What still forks is Spark's own: one
-  * `rm -rf` per stopped query, in which `ArtifactManager` clears the
-  * artifact directory of the query's session clone once that clone is
-  * collected, on the JVM's cleaner thread, off the round's path.
+  * 2 days, ~10 sink files; `local[4]` on 4 vCPUs; medians of the last 35
+  * of 70 rounds, from the queries' progress reports): round wall 0.21 s;
+  * query start and stop ~65 ms; `latestOffset`, `walCommit` and
+  * `commitOffsets` 1–2 ms each; `getBatch` 5 ms, `queryPlanning` 8 ms;
+  * `addBatch` ~120 ms. A warm round compiles no generated code. Spark's
+  * codegen cache is keyed by class loader, and with per-session artifact
+  * isolation on (Spark's default) each query's session clone ran its tasks
+  * in a class loader of its own, so every round compiled the same 7
+  * classes again: round wall 0.29 s, `addBatch` ~200 ms. `Checkpoints.start`
+  * starts the query without that isolation; a session the program is
+  * embedded in needs no setting for it. A round forks no process per
+  * file: the checkpoint logs rename without a `readlink` (`Checkpoints`),
+  * and the sink, the checkpoint logs and `_spark_metadata` create files
+  * without a `chmod` (`LocalWrites`; with forks a round measured 0.56 s,
+  * `addBatch` ~420 ms and 10 ms for each log phase). What still forks is
+  * Spark's own: one `rm -rf` per stopped query, in which `ArtifactManager`
+  * clears the artifact directory of the query's session clone once that
+  * clone is collected, on the JVM's cleaner thread, off the round's path.
   */
 object IncrementalLoader {
 

@@ -58,13 +58,8 @@ object LocalWrites {
     * options into it: the streaming file sink, which does so in `start()`,
     * and a write to a catalog table, whose options would become table
     * properties. */
-  def scoped[A](spark: SparkSession, path: String)(body: => A): A = {
-    val ks = options(spark, path)
-    val saved = ks.keys.map(k => k -> spark.conf.getOption(k))
-    ks.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
+  def scoped[A](spark: SparkSession, path: String)(body: => A): A =
+    Checkpoints.scoped(spark, options(spark, path))(body)
 }
 
 /** Hadoop's checksummed local file system, with the same files, `.crc`

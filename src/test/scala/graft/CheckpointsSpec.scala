@@ -2,18 +2,25 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicReference
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{Checkpoints, IncrementalLoader, SchemeCheckpointFileManager}
+import graft.streaming.{Checkpoints, IncrementalLoader, SchemeCheckpointFileManager, StreamingUpsert}
 
 /** The checkpoint file manager every checkpointed query runs under: local
   * checkpoints rename through FileSystem, other schemes keep Spark's
-  * default, and the loader's exactly-once contract holds under it. */
+  * default, and the loader's exactly-once contract holds under it.
+  * Queries start without per-session artifact isolation, so a warm round
+  * hits Spark's codegen cache, and the session conf is left as it was. */
 class CheckpointsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -131,7 +138,85 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(IncrementalLoader.loaded(spark, out).count() === 70)
   }
 
-  test("Checkpoints.start is the only place a query gets a checkpoint location") {
+  /** Classes Spark's code generator has compiled in this JVM so far. */
+  private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  test("a warm loader round compiles no generated code") {
+    val base = Files.createTempDirectory("graft_ckm_codegen").toString
+    val (src, out, ckpt) = (s"$base/src", s"$base/out", s"$base/ckpt")
+    mkBatch(0 until 10, src)
+    val schema = spark.read.parquet(src).schema
+    assert(IncrementalLoader.runOnce(spark, src, schema, out, ckpt) === 1)
+    mkBatch(10 until 20, src)
+    val before = compiles
+    assert(IncrementalLoader.runOnce(spark, src, schema, out, ckpt) === 1)
+    assert(compiles - before === 0, "classes compiled by the second round")
+    assert(IncrementalLoader.loaded(spark, out).count() === 20)
+  }
+
+  test("a warm upsert pass compiles no generated code") {
+    implicit val ctx = spark.sqlContext
+    val dir = Files.createTempDirectory("graft_ckm_upsert").toString
+    val (state, ckpt) = (s"$dir/state", s"$dir/ckpt")
+    val input = MemoryStream[(Long, Long, Double)]
+    def updates = input.toDF().toDF("key", "version", "value")
+    // The first pass creates the state and the second is the first to
+    // merge into a stored state, a plan of its own; the third repeats it.
+    for (k <- 1L to 2L) {
+      input.addData((k, k, k * 10.0), (k + 1, 1L, k * 20.0))
+      StreamingUpsert.runOnce(spark, updates, state, ckpt)
+    }
+    input.addData((3L, 2L, 31.0), (4L, 1L, 40.0))
+    val before = compiles
+    StreamingUpsert.runOnce(spark, updates, state, ckpt)
+    assert(compiles - before === 0, "classes compiled by the third pass")
+    assert(StreamingUpsert.state(spark, state).count() === 4)
+  }
+
+  /** A query over `src` whose batch function records the isolation value
+    * its session clone carries. */
+  private def isolationSeenByQuery(src: String, ckpt: String): String = {
+    val seen = new AtomicReference[String]
+    Checkpoints.start(spark, spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+      .writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        seen.set(batch.sparkSession.conf.get(Checkpoints.IsolationKey))
+      }
+      .trigger(Trigger.AvailableNow()), ckpt).awaitTermination()
+    seen.get
+  }
+
+  test("start leaves the session conf as it was, also when start() throws") {
+    val base = Files.createTempDirectory("graft_ckm_conf").toString
+    val src = s"$base/src"
+    mkBatch(0 until 10, src)
+    // The first start installs the checkpoint manager (by design, above).
+    assert(isolationSeenByQuery(src, s"$base/ckpt0") === "false")
+    val before = spark.conf.getAll
+    assert(!spark.sessionState.conf.contains(Checkpoints.IsolationKey))
+    assert(isolationSeenByQuery(src, s"$base/ckpt1") === "false")
+    assert(spark.conf.getAll === before)
+    intercept[Exception] {
+      Checkpoints.start(spark, spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
+        .writeStream.format("graft.no.such.format"), s"$base/ckpt2")
+    }
+    assert(spark.conf.getAll === before)
+  }
+
+  test("an isolation value the session sets itself is kept, and its queries inherit it") {
+    val base = Files.createTempDirectory("graft_ckm_iso").toString
+    val src = s"$base/src"
+    mkBatch(0 until 10, src)
+    spark.conf.set(Checkpoints.IsolationKey, "true")
+    try {
+      assert(isolationSeenByQuery(src, s"$base/ckpt") === "true")
+      assert(spark.conf.get(Checkpoints.IsolationKey) === "true")
+    } finally spark.conf.unset(Checkpoints.IsolationKey)
+  }
+
+  /** Lines of `src/main/scala` files other than Checkpoints.scala that
+    * spell `needle`. */
+  private def spelledOutsideOwner(needle: String): Seq[String] = {
     val owner = new java.io.File("src/main/scala/graft/streaming/Checkpoints.scala").getCanonicalFile
     def scalaFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(scalaFiles)
@@ -139,11 +224,20 @@ class CheckpointsSpec extends AnyFunSuite {
       else Nil
     val files = scalaFiles(new java.io.File("src/main/scala"))
     assert(files.exists(_.getCanonicalFile == owner), "scan root must contain Checkpoints.scala")
-    val hits = for {
+    for {
       f <- files if f.getCanonicalFile != owner
       (line, i) <- Files.readAllLines(f.toPath).asScala.zipWithIndex
-      if line.contains("\"checkpointLocation\"")
+      if line.contains(needle)
     } yield s"${f.getPath}:${i + 1}"
+  }
+
+  test("Checkpoints.start is the only place a query gets a checkpoint location") {
+    val hits = spelledOutsideOwner("\"checkpointLocation\"")
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("Checkpoints is the only main source that names the artifact isolation key") {
+    val hits = spelledOutsideOwner("spark.sql.artifact.isolation")
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorFunctions
@@ -17,10 +20,8 @@ import graft.functions.VectorFunctions
 class PcaParitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("pcaCovFrame (single-scan fold) == r15 join form, bit-exact") {
-    import spark.implicits._
-    val fast = llm.Similarity.pcaCovFrame(spark, TestSpark.Sf).head()
-    val slow = llm.Similarity.pcaCovFrameJoinForm(spark, TestSpark.Sf).head()
+  /** Same n_vecs and bit-identical cm cells. */
+  private def assertSameCov(fast: Row, slow: Row): Unit = {
     assert(fast.getAs[Long]("n_vecs") === slow.getAs[Long]("n_vecs"))
     val fc = fast.getSeq[Double](fast.fieldIndex("cm"))
     val sc = slow.getSeq[Double](slow.fieldIndex("cm"))
@@ -30,6 +31,25 @@ class PcaParitySpec extends AnyFunSuite {
         java.lang.Double.doubleToRawLongBits(sc(i)),
         s"cm[$i]: ${fc(i)} vs ${sc(i)}")
     }
+  }
+
+  test("pcaCovFrame (single-scan fold) == r15 join form, bit-exact") {
+    assertSameCov(llm.Similarity.pcaCovFrame(spark, TestSpark.Sf).head(),
+      llm.Similarity.pcaCovFrameJoinForm(spark, TestSpark.Sf).head())
+  }
+
+  test("zero-length embedding rows count for nothing: same covariance as without them, and as the join form") {
+    import spark.implicits._
+    val base = spark.read.parquet(s"${TestSpark.Sf}/embeddings.parquet")
+    val dir = Files.createTempDirectory("graft_pca_empty").toString
+    val empty = spark.range(3).select(($"id" + 1000000L).as("vec_id"),
+      array().cast(base.schema("embedding").dataType).as("embedding"), lit(0).as("label"))
+    base.unionByName(empty).write.parquet(s"$dir/embeddings.parquet")
+    assert(spark.read.parquet(s"$dir/embeddings.parquet")
+      .filter(size($"embedding") === 0).count() === 3)
+    val withEmpty = llm.Similarity.pcaCovFrame(spark, dir).head()
+    assertSameCov(withEmpty, llm.Similarity.pcaCovFrame(spark, TestSpark.Sf).head())
+    assertSameCov(withEmpty, llm.Similarity.pcaCovFrameJoinForm(spark, dir).head())
   }
 
   test("PcaPowerDeflate == r15 HOF fold tower, 4 components, bit-exact") {
